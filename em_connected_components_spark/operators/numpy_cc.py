@@ -8,12 +8,14 @@ Shiloach–Vishkin-style hook + pointer-doubling over numpy arrays: every
 operation is O(m) or O(n) array math, converging in O(log n) rounds — ~100ms
 for a million edges vs seconds for a dict-based union-find.
 
-Used from two places, always INSIDE an executor task (mapInPandas /
+Used from three places, always INSIDE an executor task (mapInPandas /
 applyInPandas), never on the driver:
 * the CC finish path once the contracted graph fits one task
   (plans/connected_components.py) — the Spark analogue of the reference's
   semi-external switch, with the serial work riding an executor so no
   driver-local filesystem or Arrow collect is involved;
+* the insert and delete folds once their batch-bounded piece fits one task
+  (plans/incremental.py, plans/decremental.py);
 * the bundle-local union-find pass (plans/local_solve.py — SibeynWithBundles,
   cpp/streaming/algorithms/SibeynWithBundles.h:23-206).
 """
@@ -57,6 +59,38 @@ def solve_cc_numpy(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray
                 break
             parent = nxt
     return nodes, nodes[parent]
+
+
+def fold_insert_numpy(
+    u: np.ndarray, v: np.ndarray, star: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Solve an insert fold's piece: the new edges (star == 0) plus the star
+    edges (node, old comp) of their label slice (star == 1).
+
+    Returns (key, comp, fresh) rows of two kinds:
+    * fresh == 0: an old component representative whose label moved, with
+      its new label — the map every old label row is composed through;
+    * fresh == 1: a node the old labeling has never seen, with its label.
+
+    Exact because every old comp is its component's minimum member: the
+    solve's min over (old reps, their slice members, fresh nodes) is the
+    min over the old reps and fresh nodes of the merged components, which
+    is the full recompute's label. Self-loops must be dropped beforehand (a
+    self-loop alone never puts a node into a canonical edge table).
+    """
+    u = np.asarray(u, dtype=np.int64)
+    v = np.asarray(v, dtype=np.int64)
+    star = np.asarray(star) != 0
+    nodes, comp = solve_cc_numpy(u, v)
+    reps = np.unique(v[star])
+    rep_comp = comp[np.searchsorted(nodes, reps)]
+    moved = rep_comp != reps
+    fresh = np.setdiff1d(nodes, np.concatenate([u[star], reps]))
+    fresh_comp = comp[np.searchsorted(nodes, fresh)]
+    key = np.concatenate([reps[moved], fresh])
+    flag = np.zeros(len(key), dtype=np.int64)
+    flag[int(moved.sum()):] = 1
+    return key, np.concatenate([rep_comp[moved], fresh_comp]), flag
 
 
 def jump_to_roots_numpy(

@@ -73,6 +73,17 @@ class CCMetrics:
         self.rounds.append(kw)
 
 
+def _observed(obs: Observation, name: str) -> int | None:
+    """One metric of an Observation whose action has run, or None when it
+    is missing: when the optimizer prunes the observed node (a statically
+    empty input), Spark completes the Observation with an empty row, which
+    ``Observation.get`` cannot convert."""
+    if obs._jo.getRow().length() == 0:
+        return None
+    value = obs.get[name]
+    return None if value is None else int(value)
+
+
 def _hook_parents(edges: DataFrame) -> DataFrame:
     """One hooking pass: parent(u) = min(u, min neighbor of u), plus the
     node's degree (free in the same shuffle — feeds the skew/salt trigger).
@@ -146,7 +157,7 @@ def _release_jump_cache(df: DataFrame) -> None:
 
 
 def _single_task_map(
-    df: DataFrame, fn, out_cols: tuple[str, str], out_partitions: int = 0,
+    df: DataFrame, fn, out_cols: tuple[str, ...], out_partitions: int = 0,
     single_partition: str = "shuffle",
 ) -> DataFrame:
     """Run a whole-table numpy kernel as ONE executor task via mapInPandas.
@@ -160,8 +171,9 @@ def _single_task_map(
     (c) keeps the serial work on an executor, shrinking the measured serial
     fraction (the round-1 scaling-efficiency gap was exactly this path).
 
-    ``fn(u: np.ndarray, v: np.ndarray) -> (np.ndarray, np.ndarray)`` is the
-    kernel; input columns are df's first two columns.
+    ``fn(*columns: np.ndarray) -> tuple[np.ndarray, ...]`` is the kernel: it
+    gets one int64 array per column of df, in column order, and returns one
+    array per name in ``out_cols`` (every output column is a long).
 
     ``single_partition``: how the table lands in one task. ``"shuffle"``
     (repartition(1)) computes the upstream plan at full parallelism and
@@ -174,26 +186,27 @@ def _single_task_map(
     """
     import pandas as pd  # noqa: F401  (needed inside the closure on executors)
 
-    in_a, in_b = df.columns[0], df.columns[1]
-    out_a, out_b = out_cols
+    in_cols = df.columns
 
     def run(batches):
         import numpy as np
         import pandas as pd
 
-        chunks_a, chunks_b = [], []
+        chunks: list[list] = [[] for _ in in_cols]
         for pdf in batches:
-            chunks_a.append(pdf[in_a].to_numpy(dtype=np.int64))
-            chunks_b.append(pdf[in_b].to_numpy(dtype=np.int64))
-        if not chunks_a:
+            for chunk, col in zip(chunks, in_cols):
+                chunk.append(pdf[col].to_numpy(dtype=np.int64))
+        if not chunks[0]:
             return
-        a, b = fn(np.concatenate(chunks_a), np.concatenate(chunks_b))
+        outs = fn(*(np.concatenate(chunk) for chunk in chunks))
         step = 1 << 20  # yield ~16MB Arrow batches
-        for i in range(0, len(a), step):
-            yield pd.DataFrame({out_a: a[i : i + step], out_b: b[i : i + step]})
+        for i in range(0, len(outs[0]), step):
+            yield pd.DataFrame(
+                {col: out[i : i + step] for col, out in zip(out_cols, outs)}
+            )
 
     one = df.coalesce(1) if single_partition == "coalesce" else df.repartition(1)
-    out = one.mapInPandas(run, schema=f"{out_a} long, {out_b} long")
+    out = one.mapInPandas(run, schema=", ".join(f"{c} long" for c in out_cols))
     if out_partitions > 1:
         # fan the single-partition kernel output back out so downstream
         # consumers (cache fill, compose joins, checkpoint writes) run

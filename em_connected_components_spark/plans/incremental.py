@@ -22,27 +22,42 @@ components. Composing that back over the old map yields labels bit-identical
 to a full recompute over (old edges ∪ delta) — asserted against the same
 recursive-CTE oracle as the batch path.
 
-Scale shape (the reason this exists): when the delta node set fits the
-byte-gated broadcast bound (every streaming micro-batch), the n-row label
-table is never shuffled — one broadcast semi-join carves the delta's label
-slice, the slice broadcasts into both relabel joins, and the compose build
-side is the delta's own solution — so the cost is scan-only passes over the
-labels plus CC on the RELABELED delta, whose size is bounded by the batch,
-not the graph. Above the bound (a huge nightly delta) the relabels fall
-back to one shuffled pass over the labels. Either way a 100 TB web graph
-with a 10 GB crawl delta touches the delta iteratively and the label table
-linearly; the full-recompute alternative re-shuffles all 100 TB per round,
-for every round of the contraction loop.
+Scale shape (the reason this exists): the work is bounded by the batch, not
+the graph, in both of the fold's regimes.
+
+* Kernel path — the batch has at most ``small_graph_threshold`` rows (and its
+  node set, at most 2·rows, clears the broadcast byte gate). The piece the
+  batch bounds — its edges plus the star edges (node, comp) of its label
+  slice — is funneled through ONE repartition(1) → numpy task
+  (operators/numpy_cc.fold_insert_numpy), which returns the old-rep → new-comp
+  map and the fresh nodes. One broadcast left join over the label table then
+  applies the map. About 8 Spark jobs per fold, most of them tiny; the label
+  table is scanned, never shuffled, and keeps its partition count.
+* Distributed path — above either gate. One broadcast semi-join carves the
+  delta's label slice (byte-gated: above the bound the relabels fall back to
+  one shuffled pass over the labels), the delta is relabeled through it, the
+  contracted remainder is solved with the full engine, and the result is
+  composed back. A 100 TB web graph with a 10 GB crawl delta touches the
+  delta iteratively and the label table linearly; the full-recompute
+  alternative re-shuffles all 100 TB per round.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import time
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators.joins import relabel
 from ..operators.normalize import canonicalize
-from .connected_components import connected_components
+from ..tuning import broadcast_row_bound
+from .connected_components import (
+    CCMetrics,
+    _observed,
+    _single_task_map,
+    connected_components,
+)
 
 
 def incremental_connected_components(
@@ -50,7 +65,8 @@ def incremental_connected_components(
     new_edges: DataFrame,
     *,
     pre_canonicalized: bool = False,
-    broadcast_labels: bool = False,
+    small_graph_threshold: int = 1_000_000,
+    metrics: CCMetrics | None = None,
     **cc_kwargs,
 ) -> DataFrame:
     """Update a (node, comp) star map with a batch of new edges.
@@ -61,21 +77,31 @@ def incremental_connected_components(
     both. Returns the star map of the UNION graph, bit-identical to
     `connected_components(old_edges UNION new_edges)`.
 
-    Join shape (the n-row label table is NEVER shuffled): relabel is a
-    LEFT-OUTER join and Spark can only broadcast the RIGHT side of one, so
-    joining the delta directly against the full label table would sort-merge
-    — shuffling all n label rows. Instead ONE broadcast semi-join (delta
-    node set broadcast, labels scanned) carves the delta's label SLICE
-    (≤ 2·|batch| rows); the slice broadcasts into both relabel joins and its
-    complement yields the fresh-node set. The slice hint is BYTE-GATED like
-    every forced hint in the engine (tuning.broadcast_row_bound): a delta
-    whose node set exceeds the participating heap falls back to shuffled
-    relabels against the full table — one n-row shuffle, still far cheaper
-    than the multi-round recompute this call replaces.
-    ``broadcast_labels=True`` keeps the legacy whole-table broadcast for
-    tiny graphs/tests. The compose join's
-    build side (the delta's own solution, bounded by batch size) is always
-    broadcast-eligible and left to AQE.
+    ``small_graph_threshold``: batch rows up to which the fold solves its
+    piece in one numpy task (the kernel path); 0 always takes the
+    distributed path. Also passed to the inner `connected_components` of the
+    distributed path, where it keeps its usual meaning.
+
+    ``metrics``: the fold appends one record, ``kind="fold_kernel"`` or
+    ``kind="fold_distributed"``, with ``batch_rows``, ``affected_nodes``
+    (kernel: label rows in the delta's slice; distributed: nodes of the
+    relabeled delta), ``affected_edges`` (kernel: rows into the numpy task;
+    distributed: edges of the relabeled delta), ``wall_sec`` (the eager part
+    of the fold; the returned frame is lazy) and, on the distributed path,
+    the ``gate`` that sent it there. The distributed path's inner solve
+    appends its own round records before it.
+
+    Join shape (the n-row label table is NEVER shuffled below the byte
+    gate): relabel is a LEFT-OUTER join and Spark can only broadcast the
+    RIGHT side of one, so joining the delta directly against the full label
+    table would sort-merge — shuffling all n label rows. Instead ONE
+    broadcast semi-join (delta node set broadcast, labels scanned) carves the
+    delta's label SLICE (≤ 2·|batch| rows), which feeds the kernel or, on the
+    distributed path, broadcasts into both relabel joins. The slice hint is
+    BYTE-GATED like every forced hint in the engine
+    (tuning.broadcast_row_bound) on the 2·|batch| node bound: a batch above
+    it takes shuffled relabels against the full table — one n-row shuffle,
+    still far cheaper than the multi-round recompute this call replaces.
 
     ``cc_kwargs`` pass through to the inner `connected_components` call on
     the relabeled delta (strategy, thresholds, checkpointer, ...).
@@ -86,38 +112,114 @@ def incremental_connected_components(
     `plans.decremental.decremental_connected_components`, which re-solves
     exactly the affected components.
     """
-    delta = new_edges if pre_canonicalized else canonicalize(new_edges)
+    t0 = time.perf_counter()
+    metrics = metrics if metrics is not None else CCMetrics()
     lab = labels.select("node", "comp")
+    rows = new_edges.count()
+    # the delta node set has at most 2·rows members: that bound, not a
+    # count of the set, clears the byte gate of every broadcast below
+    slice_hint = 2 * rows <= broadcast_row_bound(labels.sparkSession)
+    if small_graph_threshold <= 0:
+        gate = "small_graph_threshold"
+    elif rows > small_graph_threshold:
+        gate = "batch_rows"
+    elif not slice_hint:
+        gate = "broadcast_row_bound"
+    else:
+        gate = None
 
+    if gate is None:
+        out, affected_nodes, affected_edges = _kernel_fold(lab, new_edges)
+        metrics.add(kind="fold_kernel", fold="insert", batch_rows=rows,
+                    affected_nodes=affected_nodes, affected_edges=affected_edges,
+                    wall_sec=time.perf_counter() - t0)
+        return out
+
+    first = len(metrics.rounds)
+    out = _distributed_fold(
+        lab, new_edges, pre_canonicalized=pre_canonicalized,
+        slice_hint=slice_hint, small_graph_threshold=small_graph_threshold,
+        metrics=metrics, **cc_kwargs,
+    )
+    solved = metrics.rounds[first:first + 1]  # the relabeled delta's round
+    metrics.add(kind="fold_distributed", fold="insert", batch_rows=rows,
+                affected_nodes=solved[0].get("n_nodes") if solved else 0,
+                affected_edges=solved[0]["m"] if solved else 0,
+                wall_sec=time.perf_counter() - t0, gate=gate)
+    return out
+
+
+def _same_layout(out: DataFrame, like: DataFrame) -> DataFrame:
+    """``out`` coalesced (no shuffle) to ``like``'s partition count, so a
+    label table folded again and again keeps one layout instead of gaining
+    a partition per fold."""
+    return out.coalesce(max(like.rdd.getNumPartitions(), 1))
+
+
+def _kernel_fold(lab: DataFrame, new_edges: DataFrame):
+    """The kernel path: returns (labels, slice rows, kernel input rows)."""
+    from ..operators.numpy_cc import fold_insert_numpy
+
+    # canonical form is not needed by the kernel (duplicates and orientation
+    # are harmless), but a self-loop alone must not add a node
+    edges = new_edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
+    nodes = edges.select(F.explode(F.array("src", "dst")).alias("node"))
+    # ONE scan-only pass over the big label table carves the delta's slice
+    lab_slice = lab.join(F.broadcast(nodes), on="node", how="leftsemi")
+    piece = edges.select("src", "dst", F.lit(0).alias("star")).unionAll(
+        lab_slice.select("node", "comp", F.lit(1).alias("star"))
+    )
+    obs = Observation()
+    piece = piece.observe(obs, F.count(F.lit(1)).alias("edges"),
+                          F.count_if(F.col("star") == 1).alias("slice"))
+    # materialized once: the map is read twice below (broadcast + fresh rows)
+    solved = _single_task_map(
+        piece, fold_insert_numpy, ("key", "comp", "fresh")
+    ).localCheckpoint(eager=True)
+    rep_map = F.broadcast(
+        solved.filter(F.col("fresh") == 0).select(
+            F.col("key").alias("__rep"), F.col("comp").alias("__newc")
+        )
+    )
+    fresh = solved.filter(F.col("fresh") == 1).select(
+        F.col("key").alias("node"), "comp"
+    )
+    out = lab.join(rep_map, lab["comp"] == rep_map["__rep"], how="left").select(
+        "node", F.coalesce("__newc", "comp").alias("comp")
+    )
+    return (_same_layout(out.unionByName(fresh), lab),
+            _observed(obs, "slice"), _observed(obs, "edges"))
+
+
+def _distributed_fold(
+    lab: DataFrame,
+    new_edges: DataFrame,
+    *,
+    pre_canonicalized: bool,
+    slice_hint: bool,
+    **cc_kwargs,
+) -> DataFrame:
+    """Relabel -> solve the contracted delta with the full engine -> compose.
+    ``slice_hint``: the byte gate cleared the delta node set for broadcast."""
+    delta = new_edges if pre_canonicalized else canonicalize(new_edges)
     delta_nodes = (
         delta.select(F.col("src").alias("node"))
         .unionAll(delta.select(F.col("dst").alias("node")))
         .distinct()
         .persist()
     )
-    if broadcast_labels:
-        lab_slice = lab  # legacy: whole table is broadcast-sized anyway
-        slice_hint = True
+    if slice_hint:
+        # ONE scan-only pass over the big label table (delta node set
+        # broadcast into a semi-join) carves the batch-bounded slice that
+        # every later join builds on
+        lab_slice = lab.join(
+            F.broadcast(delta_nodes), on="node", how="leftsemi"
+        ).persist()
     else:
-        # byte gate, same contract as the CC loop's forced hints: the slice
-        # (and the delta node set it mirrors) may only be broadcast when it
-        # fits the participating heap
-        from ..tuning import broadcast_row_bound
-
-        if delta_nodes.count() <= broadcast_row_bound(delta.sparkSession):
-            # ONE scan-only pass over the big label table (delta node set
-            # broadcast into a semi-join) carves the batch-bounded slice
-            # that every later join builds on
-            lab_slice = lab.join(
-                F.broadcast(delta_nodes), on="node", how="leftsemi"
-            ).persist()
-            slice_hint = True
-        else:
-            # delta too large to broadcast: fall back to shuffled relabels
-            # against the full table (one n-row shuffle — still far cheaper
-            # than the multi-round recompute this call replaces)
-            lab_slice = lab
-            slice_hint = False
+        # delta too large to broadcast: shuffled relabels against the full
+        # table (one n-row shuffle — still far cheaper than the multi-round
+        # recompute this call replaces)
+        lab_slice = lab
 
     # nodes the old map has never seen enter as their own representatives —
     # the slice's complement within the delta node set (the anti build side

@@ -1,5 +1,9 @@
 """Decremental CC: deleting edges via component-bounded re-solve must be
-bit-identical to a full recompute over (old MINUS removed)."""
+bit-identical to a full recompute over (old MINUS removed).
+
+Every case runs on both of the fold's paths: the default threshold takes
+the one-task kernel, ``small_graph_threshold=0`` the distributed plan; the
+fold's metrics record names the path that ran."""
 
 from __future__ import annotations
 
@@ -8,6 +12,7 @@ from pyspark.sql import functions as F
 
 from em_connected_components_spark.operators.normalize import canonicalize
 from em_connected_components_spark.plans.connected_components import (
+    CCMetrics,
     connected_components,
 )
 from em_connected_components_spark.plans.decremental import (
@@ -25,14 +30,32 @@ def _solve(spark, edges):
                                 small_graph_threshold=0)
 
 
-def _check(spark, edges, removed):
+PATHS = {"kernel": {}, "distributed": {"small_graph_threshold": 0}}
+
+
+def _fold(path, labels, edges, removed, gate=None):
+    """Fold with the named path's settings. The fold's metrics record must
+    name the path that ran and, on the distributed path, the gate that sent
+    it there (by default the zero threshold)."""
+    if gate is None and path == "distributed":
+        gate = "small_graph_threshold"
+    m = CCMetrics()
+    out = decremental_connected_components(labels, edges, removed,
+                                           pre_canonicalized=True, metrics=m,
+                                           **PATHS[path])
+    rec = m.rounds[-1]
+    assert rec["kind"] == ("fold_kernel" if gate is None else "fold_distributed")
+    assert rec.get("gate") == gate
+    return out
+
+
+def _check(spark, edges, removed, gates=None):
     labels = _solve(spark, edges)
-    got = decremental_connected_components(labels, edges, removed,
-                                           pre_canonicalized=True,
-                                           small_graph_threshold=0)
-    want = _solve(spark, edges.join(removed, on=["src", "dst"],
-                                    how="left_anti"))
-    assert _rows(got) == _rows(want)
+    want = _rows(_solve(spark, edges.join(removed, on=["src", "dst"],
+                                          how="left_anti")))
+    for path in PATHS:
+        got = _fold(path, labels, edges, removed, (gates or {}).get(path))
+        assert _rows(got) == want
 
 
 def test_bridge_removal_splits_component(spark):
@@ -48,10 +71,8 @@ def test_removal_isolates_nodes(spark):
                                   "src long, dst long")
     removed = edges
     labels = _solve(spark, edges)
-    got = decremental_connected_components(labels, edges, removed,
-                                           pre_canonicalized=True,
-                                           small_graph_threshold=0)
-    assert got.count() == 0
+    for path in PATHS:
+        assert _fold(path, labels, edges, removed).count() == 0
 
 
 def test_untouched_components_pass_through(spark):
@@ -68,19 +89,16 @@ def test_removing_nonexistent_edges_is_noop(spark):
     edges = canonicalize(gen.gilbert(spark, n=200, avg_degree=1.5, seed=5))
     removed = spark.createDataFrame([(100001, 100002)], "src long, dst long")
     labels = _solve(spark, edges)
-    got = decremental_connected_components(labels, edges, removed,
-                                           pre_canonicalized=True,
-                                           small_graph_threshold=0)
-    assert _rows(got) == _rows(labels)
+    for path in PATHS:
+        assert _rows(_fold(path, labels, edges, removed)) == _rows(labels)
 
 
 def test_empty_removal_returns_labels(spark):
     edges = canonicalize(gen.gilbert(spark, n=100, avg_degree=1.5, seed=2))
     labels = _solve(spark, edges)
     empty = spark.createDataFrame([], "src long, dst long")
-    got = decremental_connected_components(labels, edges, empty,
-                                           pre_canonicalized=True)
-    assert _rows(got) == _rows(labels)
+    for path in PATHS:
+        assert _rows(_fold(path, labels, edges, empty)) == _rows(labels)
 
 
 @pytest.mark.parametrize("seed", [3, 9])
@@ -93,15 +111,28 @@ def test_random_removals_vs_full_recompute(spark, seed):
 
 def test_shuffled_fallback_path_agrees(spark):
     # force the above-gate path (affected node set "too big" to broadcast)
-    # by shrinking the byte gate to zero via the explicit conf pin
+    # by shrinking the byte gate to one row via the explicit conf pin: the
+    # kernel is skipped too, and the semi-joins shuffle
     edges = canonicalize(gen.gilbert(spark, n=300, avg_degree=2.0, seed=4))
     removed = edges.limit(20)
     prev = spark.conf.get("spark.emcc.broadcast.maxRows", None)
     spark.conf.set("spark.emcc.broadcast.maxRows", "1")
     try:
-        _check(spark, edges, removed)
+        _check(spark, edges, removed, gates={"kernel": "affected_nodes",
+                                             "distributed": "affected_nodes"})
     finally:
         if prev is None:
             spark.conf.unset("spark.emcc.broadcast.maxRows")
         else:
             spark.conf.set("spark.emcc.broadcast.maxRows", prev)
+
+
+@pytest.mark.parametrize("path", PATHS)
+def test_removal_drops_edgeless_nodes(spark, path):
+    # 3, 10 and 11 lose their last edge and leave the labeling, as they
+    # would from a fresh solve; 1-2 stays
+    edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)],
+                                  "src long, dst long")
+    removed = spark.createDataFrame([(2, 3), (10, 11)], "src long, dst long")
+    got = _fold(path, _solve(spark, edges), edges, removed)
+    assert _rows(got) == [(1, 1), (2, 1)]

@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 
 from em_connected_components_spark.operators.numpy_cc import (
+    fold_insert_numpy,
     jump_to_roots_numpy,
     solve_cc_numpy,
 )
@@ -46,7 +47,8 @@ def test_solve_cc_self_loops_and_duplicates():
 def test_solve_cc_random_vs_union_find():
     rng = np.random.default_rng(7)
     # sparse random graph over sparse (non-dense) 64-bit-ish ids
-    ids = rng.choice(np.arange(1, 10**9, dtype=np.int64), size=2000, replace=False)
+    # drawn from the id range, not from a materialized 8 GB arange of it
+    ids = rng.choice(10**9 - 1, size=2000, replace=False) + 1
     u = ids[rng.integers(0, len(ids), size=3000)]
     v = ids[rng.integers(0, len(ids), size=3000)]
     nodes, comp = solve_cc_numpy(u, v)
@@ -66,3 +68,28 @@ def test_jump_to_roots_long_chain():
     ns, roots = jump_to_roots_numpy(node, parent)
     assert ns.tolist() == sorted(node.tolist())
     assert set(roots.tolist()) == {1}
+
+
+def test_fold_insert_composes_to_full_solve():
+    # old graph over 1..300, batch reaching fresh ids 301..400; composing the
+    # kernel's rep map and fresh rows over the old labels == a full solve
+    rng = np.random.default_rng(3)
+    ou, ov = rng.integers(1, 301, size=(2, 250))
+    nu, nv = rng.integers(1, 401, size=(2, 60))
+    keep = nu != nv
+    nu, nv = nu[keep], nv[keep]
+    old_nodes, old_comp = solve_cc_numpy(ou[ou != ov], ov[ou != ov])
+    in_slice = np.isin(old_nodes, np.concatenate([nu, nv]))
+    key, comp, fresh = fold_insert_numpy(
+        np.concatenate([nu, old_nodes[in_slice]]),
+        np.concatenate([nv, old_comp[in_slice]]),
+        np.concatenate([np.zeros(len(nu)), np.ones(in_slice.sum())]),
+    )
+    assert not np.isin(key[fresh == 1], old_nodes).any()  # no row twice
+    rep_map = dict(zip(key[fresh == 0].tolist(), comp[fresh == 0].tolist()))
+    got = {n: rep_map.get(c, c)
+           for n, c in zip(old_nodes.tolist(), old_comp.tolist())}
+    got.update(zip(key[fresh == 1].tolist(), comp[fresh == 1].tolist()))
+    u, v = np.concatenate([ou, nu]), np.concatenate([ov, nv])
+    want_nodes, want_comp = solve_cc_numpy(u[u != v], v[u != v])
+    assert got == dict(zip(want_nodes.tolist(), want_comp.tolist()))
