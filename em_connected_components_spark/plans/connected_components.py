@@ -11,7 +11,7 @@ recursion flattens to iteration and only the superstep algebra survives:
     per round:  hook (min-neighbor agg)  ->  pointer-jump to roots
                 ->  contract edges (two relabel joins + normalize + distinct)
                 ->  compose the global label map
-    finish:     when the contracted graph fits one task, shuffle it into a
+    finish:     when the contracted graph fits one task, coalesce it into a
                 single-partition mapInPandas stage and solve it there with a
                 vectorized numpy kernel (the reference's semi-external
                 Kruskal base case, cpp/streaming/basecase/BaseKruskal.h:73-111,
@@ -145,17 +145,6 @@ def _pointer_jump(parents: DataFrame, max_iters: int = 64) -> DataFrame:
     return p
 
 
-def _release_jump_cache(df: DataFrame) -> None:
-    """Unpersist a round-labels table: drops the DataFrame's own storage AND
-    the internal cache a chained-jump projection is backed by (attached as
-    ``_emcc_backing_cache`` — the projection itself is never persisted, so a
-    plain unpersist() on it would leak the backing table)."""
-    backing = getattr(df, "_emcc_backing_cache", None)
-    if backing is not None:
-        backing.unpersist()
-    df.unpersist()  # no-op when df itself carries no storage
-
-
 def _single_task_map(
     df: DataFrame, fn, out_cols: tuple[str, ...], out_partitions: int = 0,
     single_partition: str = "shuffle",
@@ -230,14 +219,11 @@ def _pointer_jump_targets(
     every node is root_T(P[node]) where root_T is the fixpoint of P
     restricted to T. On hub-heavy graphs |T| << n (773k of 4.6M on the s23
     bench graph) — small enough for the single-task numpy kernel long after
-    the full table outgrew it. Replaces the chained-probe plan's K broadcast
-    probes + convergence agg with one tiny fixed-cost kernel task (fixpoint
-    exact by construction — no pending check, no fallback pass) and one
-    fully parallel probe join; measured superstep phase eff 2-vs-8 went
-    0.52 -> (see BENCH/scaling.json) with this path.
+    the full table outgrew it. The cost is one tiny fixed-cost kernel task
+    (fixpoint exact by construction — no pending check, no fallback pass)
+    and one fully parallel probe join.
 
-    ``targets`` must be the distinct comp values as a (node) column (the
-    dispatcher computes+counts it anyway to pick this path).
+    ``targets`` must be the distinct comp values as a (node) column.
     """
     from ..operators.numpy_cc import jump_to_roots_numpy
 
@@ -254,103 +240,6 @@ def _pointer_jump_targets(
         .persist()
     )
     out.count()
-    return out
-
-
-def _pointer_jump_chained(
-    parents: DataFrame,
-    *,
-    steps: int = 8,
-    passes: int = 2,
-    broadcast_parents: bool = True,
-    max_iters: int = 64,
-    targets: DataFrame | None = None,
-) -> DataFrame:
-    """Resolve parent chains by `steps` chained probes of the ORIGINAL
-    depth-1 map inside ONE Spark job.
-
-    The depth-1 map P is fixed, so comp_{k+1}(x) = P[comp_k(x)] composed
-    `steps` times is `steps` joins against the SAME relation — when P fits
-    the broadcast threshold these become `steps` broadcast hash probes in a
-    single whole-stage-codegen map over the n-row table: one broadcast build,
-    ZERO shuffles, no per-iteration driver round-trips (path doubling costs a
-    materialize + moved-check job per log-step; this is the dominant
-    superstep phase at bench scale). Convergence check: every comp must be a
-    root of P (broadcast anti-join against the small root set). Hook forests
-    are shallow on real graphs (depth <= 8 measured on rMAT s23); after
-    `passes` chains (depth steps*passes) any pathological remainder (path
-    graphs) falls back to `_pointer_jump` doubling, keeping the O(log depth)
-    worst case.
-
-    ``broadcast_parents=False`` keeps the same probe chain as shuffle joins;
-    measured SLOWER than plain path doubling at every tested shape
-    (BENCH/jump_ab.json), so the CC driver only calls this with broadcast
-    probes — the shuffle variant remains for the A/B bench and as the
-    explicit fallback shape.
-    """
-    # the probe map only needs rows whose node actually OCCURS as a comp
-    # value (every probe key is a comp value by induction) — on hub-heavy
-    # graphs this shrinks the broadcast build ~6x (773k of 4.6M rows on the
-    # s23 bench graph); non-root rows only would not shrink it (most nodes
-    # are non-roots), target-filtering does. The dispatcher passes its
-    # already-computed target set in; direct/bench callers let us derive it.
-    if targets is None:
-        targets = parents.select(F.col("comp").alias("node")).distinct()
-    P = parents.join(targets, on="node", how="left_semi").select(
-        F.col("node").alias("__pn"), F.col("comp").alias("__pc")
-    )
-    Pb = F.broadcast(P) if broadcast_parents else P
-    cur = parents
-    prev_cache: DataFrame | None = None
-    for _ in range(passes):
-        c = cur.select("node", "comp")
-        for _ in range(steps):
-            c = c.join(Pb, on=c["comp"] == Pb["__pn"], how="left").select(
-                "node", F.coalesce("__pc", "comp").alias("comp")
-            )
-        # one extra probe computes the convergence flag IN the same job:
-        # a row is done iff another P step would not move it
-        c = (
-            c.join(Pb, on=c["comp"] == Pb["__pn"], how="left")
-            .select(
-                "node",
-                "comp",
-                (
-                    F.coalesce("__pc", F.col("comp")) == F.col("comp")
-                ).alias("__done"),
-            )
-            .persist()
-        )
-        # ONE job materializes the cache AND returns the convergence count
-        # (caching fills whole partitions regardless of the agg's columns) —
-        # fusing the former count() + filter().count() pair halves the
-        # per-pass driver round-trips, a pure serial-fraction saving
-        pending = int(
-            c.agg(
-                F.sum(
-                    F.when(~F.col("__done"), F.lit(1)).otherwise(F.lit(0))
-                ).alias("p")
-            ).collect()[0]["p"]
-            or 0
-        )
-        if prev_cache is not None:
-            prev_cache.unpersist()
-        prev_cache = c
-        cur = c
-        if pending == 0:
-            # the projection reads through c's cache; re-persisting it would
-            # copy the n-row table for nothing (measured ~15% of superstep
-            # wall), while returning it bare would leak c — Spark uncaches
-            # only on a same-plan match, so the caller's unpersist() would
-            # no-op. Hand the cache handle along instead; callers release
-            # via _release_jump_cache.
-            out = cur.select("node", "comp")
-            out._emcc_backing_cache = prev_cache
-            return out
-    # pathological depth (> steps*passes): finish with path doubling
-    out = _pointer_jump(cur.select("node", "comp"), max_iters)
-    if prev_cache is not None:
-        prev_cache.unpersist()
     return out
 
 
@@ -386,65 +275,47 @@ def _dispatch_jump(
     parents: DataFrame,
     n_before: int,
     *,
+    t_est: int,
     jump_local_threshold: int,
     broadcast_threshold_rows: int,
-    t_est: int | None = None,
-) -> DataFrame:
-    """Pick the pointer-jump plan by the measured size rule and return the
-    materialized (node, comp) root labels.
+) -> tuple[DataFrame, str]:
+    """Pick the pointer-jump plan by the measured size rule; return the
+    materialized (node, comp) root labels and the plan's name.
 
-    The plans and their crossovers (tools/bench_jump.py, BENCH/jump_ab.json,
-    tools/profile_superstep.py):
-    * ``n <= jump_local_threshold``: single-task numpy path doubling — one
-      task beats per-job scheduling overhead below ~2M rows;
-    * ``|distinct comps| <= jump_local_threshold``: targets-reduced jump —
-      solve the comp-closure (typically ~6x smaller than n) in one numpy
-      task, apply with one parallel probe join. The preferred big-graph
-      plan: its only non-parallel work is the tiny kernel task + one
-      broadcast build, vs the chained plan's K probes + convergence agg
-      (measured phase eff 0.52 at 2-vs-8 cores for chained on the s23
-      graph — the superstep's dominant serial slice);
-    * ``n <= broadcast_threshold_rows``: chained broadcast probes — one job,
-      zero shuffles, while the depth-1 map fits the broadcast budget;
-    * above all: distributed path doubling — chained shuffle probes lose
-      ~2x once every probe is an exchange.
+    The three plans, in the order the rule tries them:
+    * ``"local"`` (``n <= jump_local_threshold``): single-task numpy path
+      doubling — one task beats per-job scheduling overhead below ~2M rows;
+    * ``"targets"`` (``|distinct comps| <= jump_local_threshold``): solve the
+      comp-closure (typically ~6x smaller than n) in one numpy task, apply
+      it with one parallel probe join — its only non-parallel work is the
+      tiny kernel task and, within the broadcast bound, one broadcast build;
+    * ``"doubling"`` (everything else): distributed path doubling, the only
+      plan with no single-task or broadcast step, so the only one that
+      scales past both bounds (measured 2x faster than shuffled probe
+      chains, BENCH/jump_ab.json).
 
-    ``t_est``: size of the distinct-comp target set. The CC loop reads it as
+    ``t_est``: size of the distinct-comp target set, read as
     ``approx_count_distinct(comp)`` from the SAME aggregation job that counts
-    the parent table (one driver round-trip serves both numbers — a pure
-    serial-fraction saving); pass None to have it counted exactly here. It
-    only picks a plan, so the ±few-% HLL error is harmless: every branch is
-    exact.
+    the parent table (one driver round-trip serves both numbers). It only
+    picks a plan, so the ±few-% HLL error is harmless: every plan is exact.
 
-    Every branch returns a persisted+materialized table; release it with
-    `_release_jump_cache` (the chained branch hands its backing cache along).
-    Shared by the CC driver loop and tools/profile_superstep.py so profiles
-    measure the plan production runs.
+    Every plan returns its own persisted+materialized table; release it
+    with ``unpersist()``.
     """
     if n_before <= jump_local_threshold:
         round_labels = _pointer_jump_local(parents).persist()
         round_labels.count()  # materialize before callers drop parents
-        return round_labels
-    targets = parents.select(F.col("comp").alias("node")).distinct()
-    if t_est is None:
-        t_est = targets.count()
+        return round_labels, "local"
     if t_est <= jump_local_threshold:
+        targets = parents.select(F.col("comp").alias("node")).distinct()
         return _pointer_jump_targets(
             parents, targets,
             broadcast_resolved=t_est <= broadcast_threshold_rows,
-        )
-    if n_before <= broadcast_threshold_rows:
-        # self-cached + counted; single-job broadcast probes while the
-        # parent table fits the broadcast budget
-        return _pointer_jump_chained(
-            parents, broadcast_parents=True, targets=targets
-        )
-    return _pointer_jump(parents)
+        ), "targets"
+    return _pointer_jump(parents), "doubling"
 
 
-def _union_find_finish(
-    edges: DataFrame, single_partition: str = "coalesce"
-) -> DataFrame:
+def _union_find_finish(edges: DataFrame) -> DataFrame:
     """Solve the (small) contracted edge table with the vectorized numpy CC
     kernel in one executor task; returns the (node, comp) star map.
 
@@ -455,20 +326,219 @@ def _union_find_finish(
     multiple seconds, and no driver round-trip. Roots are min members,
     matching the distributed rounds.
 
-    ``single_partition="coalesce"`` (default) is for a MATERIALIZED edge
-    table (localCheckpoint- or parquet-backed): the kernel task reads the
-    stored blocks directly, skipping the repartition shuffle stage (one
-    fewer fixed-latency stage in the serial finish tail). The fused finish
-    passes ``"shuffle"`` instead, because there its input is the LAZY
-    contract plan: repartition(1) keeps the contract running at full
-    parallelism and funnels only its (small) output into the kernel task.
+    The edge table must be MATERIALIZED (localCheckpoint-, cache- or
+    parquet-backed): the kernel task reads the stored blocks directly via
+    coalesce(1), skipping the repartition shuffle stage (one fewer
+    fixed-latency stage in the serial finish tail).
     """
     from ..operators.numpy_cc import solve_cc_numpy
 
     return _single_task_map(
         edges.select("src", "dst"), solve_cc_numpy, ("node", "comp"),
-        single_partition=single_partition,
+        single_partition="coalesce",
     )
+
+
+class _ComponentCount:
+    """Exact component count, tracked as a free by-product of jobs the solve
+    runs anyway — no extra job.
+
+    Invariant: ``value`` = number of distinct comps in the composed label
+    table so far. Per round, if the round's graph has n nodes (every one a
+    comp of the composition) and its label map has R distinct roots, then
+    value' = R + value - n (comps without surviving edges are untouched).
+    The base case folds in: before round 0 the labeling is the identity on
+    the n_0 graph nodes, so value_0 = R_0. Each quantity rides a job the
+    solve already runs: hook roots satisfy comp == node (min-hook ⇒ parent ≤
+    node, no cycles) and jumping never changes the root set, so R is one
+    plain SUM(node = comp) in the existing stats agg; a star round removes
+    exactly its hooked sources (break_paths guarantees sources are never
+    centers), so value -= hook count (already counted); the finish kernel's
+    (n_fin, R_fin) ride the compose/checkpoint job as an Observation. This
+    replaces the separate countDistinct scan callers ran for n_components —
+    one fewer n-row job in the cc_full tail (VERDICT r4 #1b).
+
+    ``tracked`` is False on paths that start from labels the count never saw
+    (G6 pre-pass, checkpoint resume), and turns False when a folded value
+    was not observed.
+    """
+
+    def __init__(self, tracked: bool) -> None:
+        self.tracked = tracked
+        self.value: int | None = None
+
+    def fold(self, roots: int | None, nodes: int | None) -> bool:
+        """Fold in one label map over ``nodes`` graph nodes with ``roots``
+        distinct roots. A missing value stops the tracking; returns False
+        when it did."""
+        if not self.tracked:
+            return True
+        if roots is None or nodes is None:
+            self.tracked, self.value = False, None
+            return False
+        self.value = roots if self.value is None else roots + self.value - nodes
+        return True
+
+    def drop(self, hooked: int) -> None:
+        """A star round: every hooked source stops being a root."""
+        if self.value is not None:
+            self.value -= hooked
+
+
+def _hook_and_jump(
+    e: DataFrame,
+    m: int,
+    count: _ComponentCount,
+    *,
+    hub_seeds: list[int] | None,
+    jump_local_threshold: int,
+    broadcast_threshold_rows: int,
+) -> tuple[DataFrame, dict, list[tuple[int, int]]]:
+    """One Boruvka hook + pointer jump over the edge table ``e`` (``m``
+    rows). Returns the persisted round labels, the round's record fields
+    (``n_nodes``, ``jump``, ``hub_source``) and the heavy hitters for the
+    relabel."""
+    parents_full = _hook_parents(e).persist()
+    # ONE job fills the cache and returns both dispatch inputs: the node
+    # count (jumping preserves it) and the approximate distinct-comp count
+    # (picks the targets-reduced jump plan); the root count rides along
+    stats = parents_full.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.approx_count_distinct("comp").alias("t"),
+        F.sum((F.col("node") == F.col("comp")).cast("long")).alias("r"),
+    ).collect()[0]
+    n_before = stats["n"]
+    count.fold(int(stats["r"] or 0), n_before)
+    round_labels, jump = _dispatch_jump(
+        parents_full.select("node", "comp"), n_before, t_est=stats["t"],
+        jump_local_threshold=jump_local_threshold,
+        broadcast_threshold_rows=broadcast_threshold_rows,
+    )
+    heavy: list[tuple[int, int]] = []
+    hub_source = None
+    if n_before > broadcast_threshold_rows:
+        # skew trigger: a broadcast relabel has no shuffle to skew; on the
+        # shuffled path one mega-hub funnels its full degree into a single
+        # reducer. Detected hubs bypass the join via a literal-map fast path
+        # (joins.relabel_heavy_split) while AQE's skew-join splitting covers
+        # residual moderate skew. Measured A/B on mega-hub stars
+        # (BENCH/salting.json): neutral at 10M leaves, ~7% faster at 30M —
+        # fires only beyond max(4m/partitions, 1M) degree.
+        if hub_seeds:
+            # seeded by the online monitor: no detect job at all
+            hot_ids = [int(h) for h in hub_seeds][:1024]
+            hub_source = "seeded"
+        else:
+            # degree came free with the hook shuffle; the threshold scan is
+            # one cheap job over the cached n-row parent table
+            sp = int(
+                e.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+            )
+            deg_thr = max(4 * m // max(sp, 1), 1_000_000)
+            hot_ids = [
+                r["node"]
+                for r in parents_full.filter(F.col("deg") > deg_thr)
+                .select("node")
+                .limit(1024)
+                .collect()
+            ]
+            hub_source = "scan" if hot_ids else None
+        if hot_ids:
+            heavy = [
+                (r["node"], r["comp"])
+                for r in round_labels.filter(
+                    F.col("node").isin(hot_ids)
+                ).collect()
+            ]
+    parents_full.unpersist()
+    rec = {"n_nodes": n_before, "jump": jump, "hub_source": hub_source}
+    return round_labels, rec, heavy
+
+
+def _contract_and_compose(
+    e: DataFrame,
+    labels: DataFrame | None,
+    held: DataFrame | None,
+    round_labels: DataFrame,
+    *,
+    broadcast: bool,
+    heavy: list[tuple[int, int]],
+    checkpointer: RoundCheckpointer | None,
+    rnd: int,
+    ckpt_metrics: dict,
+) -> tuple[DataFrame, DataFrame, DataFrame | None, int]:
+    """Contract ``e`` by the round's labels and compose them onto ``labels``.
+
+    Returns the next round's materialized edge table, the composed labels,
+    the round-0 labels kept cached (``held``: on the first round the labels
+    ARE the persisted round labels, released at the next composition) and
+    the next edge count. Drops ``e`` and ``round_labels`` once they are no
+    longer read.
+    """
+    e_next = contract(
+        e, round_labels, broadcast_labels=broadcast, heavy_hitters=heavy,
+    )
+    first_round = labels is None
+    if first_round:
+        labels = round_labels
+    else:
+        labels = compose_labels(labels, round_labels, broadcast_inner=broadcast)
+
+    # m_next rides the checkpoint materialization job as an observed metric
+    # instead of a separate count() scan — one fewer job (and one fewer
+    # driver round-trip) per round, a pure serial-fraction saving (VERDICT
+    # r3 #2). Works on both tails: the parquet write and the eager
+    # localCheckpoint both fire the observation.
+    obs = Observation()
+    e_next = e_next.observe(obs, F.count(F.lit(1)).alias("m_next"))
+    if checkpointer is not None:
+        e_next, labels = checkpointer.save_round(
+            rnd, e_next, labels, metrics=ckpt_metrics
+        )
+        round_labels.unpersist()  # labels now parquet-backed
+        # lazy cache over the round parquet — filled by the next round's
+        # first scan (hook); no dedicated staging job
+        e_next = e_next.persist()
+    else:
+        # the eager localCheckpoint already stores every partition; a
+        # persist()+count() on top would copy the table again
+        e_next = e_next.localCheckpoint(eager=True)
+        if first_round:
+            # a localCheckpoint here would re-copy the n-row table for
+            # nothing; keep the cache alive until the next composition
+            held = round_labels
+        else:
+            labels = labels.localCheckpoint(eager=True)
+            round_labels.unpersist()
+            if held is not None:
+                held.unpersist()
+                held = None
+    e.unpersist()
+    return e_next, labels, held, int(obs.get["m_next"])
+
+
+def _finish(
+    e: DataFrame, labels: DataFrame | None
+) -> tuple[DataFrame, int | None, int | None]:
+    """Semi-external finish: solve the contracted edge table in one kernel
+    task and compose it onto ``labels``. Returns the materialized labels and
+    the kernel's node and root counts (None when not observed)."""
+    local_labels = _union_find_finish(e)
+    obs = Observation()
+    local_labels = local_labels.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_fin"),
+        F.sum((F.col("node") == F.col("comp")).cast("long")).alias("r_fin"),
+    )
+    if labels is None:
+        labels = local_labels
+    else:
+        # the local map is small by construction -> broadcast compose
+        labels = compose_labels(labels, local_labels, broadcast_inner=True)
+    # materialize before the caller drops the cached edge table the kernel
+    # task reads from
+    labels = labels.localCheckpoint(eager=True)
+    return labels, _observed(obs, "n_fin"), _observed(obs, "r_fin")
 
 
 def connected_components(
@@ -483,11 +553,8 @@ def connected_components(
     policy: "Policy | None" = None,
     local_solve_bucket_width: int = 0,
     jump_local_threshold: int = 2_000_000,
-    heavy_hitter_split: bool = True,
     hub_seeds: list[int] | None = None,
     seed: int = 42,
-    fuse_finish: bool = False,
-    profile_finish: bool = False,
 ) -> DataFrame:
     """Exact CC labels (node, comp) with comp = min member of the component.
 
@@ -502,7 +569,8 @@ def connected_components(
     capped at 16M — e.g. ~524k rows on 1GB executors, ~2M on 4GB), so the
     explicit hint can never exceed what the participating heaps hold; the
     ``spark.emcc.broadcast.maxRows`` conf pins it explicitly. Above the
-    threshold AQE still upgrades joins it measures as small enough.
+    threshold AQE still upgrades joins it measures as small enough, and the
+    relabel splits off detected mega-hubs (heavy hitters).
     ``checkpointer``: if given, per-round edge/label tables are persisted and
     a killed run resumes from the last completed round.
     ``policy``: optional plans.policy.Policy overriding the two thresholds and
@@ -510,33 +578,27 @@ def connected_components(
     ``local_solve_bucket_width``: >0 runs one bundle-local union-find pass
     (SibeynWithBundles, G6) before the iterative loop — wins when node ids
     have locality (paths/grids/crawl order).
-    ``jump_local_threshold``: parent tables at or below this row count do
-    their pointer jumping as one vectorized mapInPandas task (path doubling
-    on numpy index arrays) instead of log(depth) distributed self-joins — the
-    jump-phase analogue of the semi-external switch. The default is the
-    measured crossover (~2s/M rows single-task vs ~8s flat distributed):
-    below it one task beats per-job scheduling overhead; above it the
-    distributed joins win AND carry no serial fraction.
+    ``jump_local_threshold``: picks each Boruvka round's pointer-jump plan,
+    named as ``jump`` in the round's record (see ``_dispatch_jump``):
+    ``"local"`` (one numpy task) when the parent table has at most this many
+    rows, ``"targets"`` when its distinct comps do, ``"doubling"`` (log(depth)
+    distributed self-joins) otherwise. The default is the measured crossover
+    (~2s/M rows single-task vs ~8s flat distributed).
     ``hub_seeds``: known mega-hub node ids (e.g. flagged online by
     streaming.events.running_degree_monitor while the crawl frontier was
     ingesting) — the FIRST executed round arms the heavy-split relabel path
     directly from this list, skipping the degree-scan detect job entirely;
     later rounds re-detect from the (contracted) degrees as usual, since
     contraction renames nodes.
-    ``fuse_finish``: opt-in — when a round's stats job predicts the NEXT
-    contracted graph fits the semi-external kernel, pipe the contraction
-    straight into the one-task finish inside the same job instead of
-    materializing it first (one fewer job + localCheckpoint + broadcast
-    rebuild). Default False by measured A/B (BENCH/fuse_ab.json): on this
-    bench the unfused tail's materialized input beats the saved job.
 
     On convergence ``metrics.n_components`` holds the EXACT component count,
     tracked as a free by-product (root-count aggregates riding the existing
-    stats job / finish Observation — see the bookkeeping comment in the
-    loop); callers that previously ran ``countDistinct("comp")`` over the
-    returned n-row table can read it instead, removing one full scan job
-    from the solve tail. None when not tracked (KKT strategy, G6 pre-pass,
-    checkpoint resume, stopped at max_rounds before convergence).
+    stats job / finish Observation — see ``_ComponentCount``); callers that
+    previously ran ``countDistinct("comp")`` over the returned n-row table
+    can read it instead, removing one full scan job from the solve tail.
+    None when not tracked (KKT strategy, G6 pre-pass, checkpoint resume,
+    stopped at max_rounds before convergence, or a finish count that was not
+    observed — then the finish record carries ``n_components_unobserved``).
     """
     spark = edges.sparkSession
     metrics = metrics if metrics is not None else CCMetrics()
@@ -592,26 +654,8 @@ def connected_components(
     e = e.persist()
     m = e.count()
     n_prev: int | None = None
-    held_labels_cache: DataFrame | None = None  # round-0 labels kept cached
-
-    # --- exact component-count bookkeeping (zero extra jobs) -------------
-    # Invariant: comp_count = number of distinct comps in the composed label
-    # table so far. Per round, if the round's graph has n nodes (every one a
-    # comp of the composition) and its label map has R distinct roots, then
-    # comp_count' = R + comp_count - n (comps without surviving edges are
-    # untouched). The base case folds in: before round 0 the labeling is the
-    # identity on the n_0 graph nodes, so comp_count_0 = R_0. Each quantity
-    # rides a job the solve already runs: hook roots satisfy comp == node
-    # (min-hook ⇒ parent ≤ node, no cycles) and jumping never changes the
-    # root set, so R is one plain SUM(node = comp) in the existing stats
-    # agg; a star round removes exactly its hooked sources (break_paths
-    # guarantees sources are never centers), so comp_count -= hook_count
-    # (already counted); the finish kernel's (n_fin, R_fin) ride the
-    # compose/checkpoint job as an Observation. This replaces the separate
-    # countDistinct scan callers ran for n_components — one fewer n-row job
-    # in the cc_full tail (VERDICT r4 #1b).
-    comp_count: int | None = None
-    comp_track = start_round == 0 and local_solve_bucket_width == 0
+    held: DataFrame | None = None  # round-0 labels kept cached
+    count = _ComponentCount(start_round == 0 and local_solve_bucket_width == 0)
 
     for rnd in range(start_round, max_rounds):
         if m == 0:
@@ -619,55 +663,14 @@ def connected_components(
         t0 = time.time()
 
         if m <= small_graph_threshold:
-            # --- semi-external finish: one-task vectorized CC solve ---
-            local_labels = _union_find_finish(e)
-            obs_fin = Observation()
-            local_labels = local_labels.observe(
-                obs_fin,
-                F.count(F.lit(1)).alias("n_fin"),
-                F.sum(
-                    (F.col("node") == F.col("comp")).cast("long")
-                ).alias("r_fin"),
-            )
-            kernel_wall = compose_wall = None
-            if profile_finish:
-                # attribution mode (tools/profile_cc_tail.py): materialize
-                # the kernel output first so its wall separates from the
-                # compose scan. Costs one extra tiny job vs the production
-                # single-job finish — attribution only, never the bench path.
-                t_k = time.time()
-                local_labels = local_labels.localCheckpoint(eager=True)
-                kernel_wall = time.time() - t_k
-            t_c = time.time()
-            if labels is None:
-                labels = local_labels
-            else:
-                # the local map is small by construction -> broadcast compose
-                labels = compose_labels(labels, local_labels, broadcast_inner=True)
-            # materialize before dropping the cached edge table the kernel
-            # task reads from
-            labels = labels.localCheckpoint(eager=True)
-            if profile_finish:
-                compose_wall = time.time() - t_c
-            if comp_track:
-                try:
-                    n_fin = int(obs_fin.get["n_fin"])
-                    r_fin = int(obs_fin.get["r_fin"])
-                    comp_count = (
-                        r_fin
-                        if comp_count is None
-                        else r_fin + comp_count - n_fin
-                    )
-                except Exception:
-                    comp_count = None  # observation optimized away (rare)
-            if held_labels_cache is not None:
-                _release_jump_cache(held_labels_cache)
-                held_labels_cache = None
+            labels, n_fin, r_fin = _finish(e, labels)
+            observed = count.fold(r_fin, n_fin)
+            if held is not None:
+                held.unpersist()
             fin_rec = {"round": rnd, "kind": "unionfind_finish", "m": m,
                        "wall_sec": time.time() - t0}
-            if profile_finish:
-                fin_rec["kernel_wall"] = kernel_wall
-                fin_rec["compose_wall"] = compose_wall
+            if not observed:
+                fin_rec["n_components_unobserved"] = True
             metrics.add(**fin_rec)
             e.unpersist()
             m = 0
@@ -684,227 +687,31 @@ def connected_components(
                 e, seed=seed + rnd
             ).persist()
             n_before = round_labels.count()
-            if comp_track and comp_count is not None:
-                # every hooked source stops being a component root; centers
-                # are never sources (break_paths), so the distinct-comp
-                # count drops by exactly the hook count
-                comp_count -= n_before
+            count.drop(n_before)
+            rec = {"n_nodes": n_before, "jump": None, "hub_source": None}
+            heavy: list[tuple[int, int]] = []
         else:
-            parents_full = _hook_parents(e).persist()
-            # ONE job fills the cache and returns both dispatch inputs:
-            # the node count (jumping preserves it) and the approximate
-            # distinct-comp count (picks the targets-reduced jump plan)
-            stats = parents_full.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.approx_count_distinct("comp").alias("t"),
-                F.sum(
-                    (F.col("node") == F.col("comp")).cast("long")
-                ).alias("r"),
-            ).collect()[0]
-            n_before, t_est = stats["n"], stats["t"]
-            if comp_track:
-                r_exact = int(stats["r"] or 0)
-                comp_count = (
-                    r_exact
-                    if comp_count is None
-                    else r_exact + comp_count - n_before
-                )
-            parents = parents_full.select("node", "comp")
-            round_labels = _dispatch_jump(
-                parents, n_before, t_est=t_est,
+            round_labels, rec, heavy = _hook_and_jump(
+                e, m, count,
+                hub_seeds=hub_seeds if rnd == start_round else None,
                 jump_local_threshold=jump_local_threshold,
                 broadcast_threshold_rows=broadcast_threshold_rows,
             )
-
+            n_before = rec["n_nodes"]
         do_broadcast = n_before <= broadcast_threshold_rows
-        heavy: list[tuple[int, int]] = []
-        hub_source: str | None = None
-        if strategy == "boruvka":
-            if heavy_hitter_split and not do_broadcast:
-                # skew trigger: a broadcast relabel has no shuffle to skew;
-                # on the shuffled path one mega-hub funnels its full degree
-                # into a single reducer. Detected hubs bypass the join via a
-                # literal-map fast path (joins.relabel_heavy_split) while
-                # AQE's skew-join splitting covers residual moderate skew.
-                # Measured A/B on mega-hub stars (tools/bench_salting.py,
-                # BENCH/salting.json): neutral at 10M leaves, ~7% faster at
-                # 30M — fires only beyond max(4m/partitions, 1M) degree.
-                if hub_seeds and rnd == start_round:
-                    # seeded by the online monitor: no detect job at all —
-                    # ids refer to the ORIGINAL graph, hence first round only
-                    hot_ids = [int(h) for h in hub_seeds][:1024]
-                    hub_source = "seeded"
-                else:
-                    # degree came free with the hook shuffle; the threshold
-                    # scan is one cheap job over the cached n-row parent table
-                    sp = int(
-                        spark.conf.get("spark.sql.shuffle.partitions", "200")
-                    )
-                    deg_thr = max(4 * m // max(sp, 1), 1_000_000)
-                    hot_ids = [
-                        r["node"]
-                        for r in parents_full.filter(F.col("deg") > deg_thr)
-                        .select("node")
-                        .limit(1024)
-                        .collect()
-                    ]
-                    hub_source = "scan" if hot_ids else None
-                if hot_ids:
-                    heavy = [
-                        (r["node"], r["comp"])
-                        for r in round_labels.filter(
-                            F.col("node").isin(hot_ids)
-                        ).collect()
-                    ]
-            parents_full.unpersist()
 
-        # --- fused finish (opt-in): contract straight into the kernel ---
-        # When the round's free stats job says the contracted graph will fit
-        # the semi-external kernel (t_est approximates its NODE count; the
-        # kernel is O(m) numpy either way, so a miss is slow-but-correct,
-        # never wrong), skip the per-round materialization entirely: the
-        # contract plan funnels through repartition(1) into the kernel task
-        # within the SAME job, and the final compose is the only n-row pass.
-        # vs the unfused tail this removes one full job + one small-table
-        # localCheckpoint + one broadcast rebuild — fixed serial cost.
-        # MEASURED default-off: an interleaved 4-pair A/B at local[8] on the
-        # 129M-edge rMAT s23 (BENCH/fuse_ab.json) gave fused 33.3s vs
-        # unfused 27.9s median — the saved job does not pay for losing the
-        # materialized (localCheckpoint) input that lets the kernel task
-        # read stored blocks, so the fusion is kept as an opt-in for
-        # workloads where round-tail materialization dominates (many tiny
-        # rounds). Guards: never under a checkpointer (resume needs the
-        # per-round tables), never on the last allowed round (max_rounds
-        # callers measure exactly-one-superstep), boruvka only (star rounds
-        # compute no t_est).
-        fuse_now = (
-            fuse_finish
-            and strategy == "boruvka"
-            and checkpointer is None
-            and rnd + 1 < max_rounds
-            and 0 < t_est <= small_graph_threshold
+        e, labels, held, m_next = _contract_and_compose(
+            e, labels, held, round_labels,
+            broadcast=do_broadcast, heavy=heavy, checkpointer=checkpointer,
+            rnd=rnd,
+            ckpt_metrics={"m": m, "n_nodes": n_before,
+                          "broadcast": do_broadcast, "kind": strategy},
         )
-        if fuse_now:
-            t_hookjump = time.time() - t0
-            t1 = time.time()
-            e_next = contract(
-                e, round_labels, broadcast_labels=do_broadcast,
-                heavy_hitters=heavy,
-            )
-            obs = Observation()
-            observed = e_next.observe(obs, F.count(F.lit(1)).alias("m_next"))
-            local_labels = _union_find_finish(
-                observed, single_partition="shuffle"
-            )
-            obs_fin = Observation()
-            local_labels = local_labels.observe(
-                obs_fin,
-                F.count(F.lit(1)).alias("n_fin"),
-                F.sum(
-                    (F.col("node") == F.col("comp")).cast("long")
-                ).alias("r_fin"),
-            )
-            mid = (
-                round_labels
-                if labels is None
-                else compose_labels(
-                    labels, round_labels, broadcast_inner=do_broadcast
-                )
-            )
-            labels = compose_labels(mid, local_labels, broadcast_inner=True)
-            labels = labels.localCheckpoint(eager=True)
-            try:
-                m_next = int(obs.get["m_next"])
-            except Exception:
-                # AQE can optimize the observed node out of the broadcast
-                # subtree (seen when the contraction empties the graph and
-                # empty-relation propagation eliminates the join); fall back
-                # to one count over the cached-input contract plan — rare,
-                # and trivial exactly when it happens
-                m_next = e_next.count()
-            metrics.add(
-                round=rnd, kind="boruvka_superstep", m=m, m_next=m_next,
-                n_nodes=n_before, wall_sec=t_hookjump,
-                edges_per_sec=m / max(t_hookjump, 1e-9),
-                broadcast=do_broadcast, n_heavy_hitters=len(heavy),
-                hub_source=hub_source, fused_finish=True,
-            )
-            metrics.add(
-                round=rnd + 1, kind="unionfind_finish", m=m_next,
-                wall_sec=time.time() - t1, fused=True,
-            )
-            if comp_track:
-                try:
-                    n_fin = int(obs_fin.get["n_fin"])
-                    r_fin = int(obs_fin.get["r_fin"])
-                    # comp_count already folded this round's hook/jump via
-                    # the stats update above; fold the kernel solve on top
-                    comp_count = r_fin + comp_count - n_fin
-                except Exception:
-                    comp_count = None
-            _release_jump_cache(round_labels)
-            if held_labels_cache is not None:
-                _release_jump_cache(held_labels_cache)
-                held_labels_cache = None
-            e.unpersist()
-            m = 0
-            break
-
-        e_next = contract(
-            e, round_labels, broadcast_labels=do_broadcast,
-            heavy_hitters=heavy,
-        )
-
-        first_round = labels is None
-        if first_round:
-            labels = round_labels
-        else:
-            labels = compose_labels(
-                labels, round_labels, broadcast_inner=do_broadcast
-            )
-
-        # m_next rides the checkpoint materialization job as an observed
-        # metric instead of a separate count() scan — one fewer job (and one
-        # fewer driver round-trip) per round, a pure serial-fraction saving
-        # (VERDICT r3 #2). Works on both tails: the parquet write and the
-        # eager localCheckpoint both fire the observation.
-        obs = Observation()
-        e_next = e_next.observe(obs, F.count(F.lit(1)).alias("m_next"))
-        if checkpointer is not None:
-            e_next, labels = checkpointer.save_round(
-                rnd, e_next, labels,
-                metrics={"m": m, "n_nodes": n_before,
-                         "broadcast": do_broadcast, "kind": strategy},
-            )
-            _release_jump_cache(round_labels)  # labels now parquet-backed
-            e.unpersist()
-            # lazy cache over the round parquet — filled by the next round's
-            # first scan (hook); no dedicated staging job
-            e = e_next.persist()
-        else:
-            e_next = e_next.localCheckpoint(eager=True)
-            if first_round:
-                # labels IS round_labels: already persisted + materialized —
-                # a localCheckpoint here would re-copy the n-row table for
-                # nothing; keep the cache alive until the next composition
-                held_labels_cache = round_labels
-            else:
-                labels = labels.localCheckpoint(eager=True)
-                _release_jump_cache(round_labels)
-                if held_labels_cache is not None:
-                    _release_jump_cache(held_labels_cache)
-                    held_labels_cache = None
-            e.unpersist()
-            # the eager localCheckpoint already stored every partition; a
-            # second persist()+count() here would copy the table again
-            e = e_next
-        m_next = int(obs.get["m_next"])
         metrics.add(
             round=rnd, kind=f"{strategy}_superstep", m=m, m_next=m_next,
-            n_nodes=n_before, wall_sec=time.time() - t0,
+            wall_sec=time.time() - t0,
             edges_per_sec=m / max(time.time() - t0, 1e-9),
-            broadcast=do_broadcast, n_heavy_hitters=len(heavy),
-            hub_source=hub_source,
+            broadcast=do_broadcast, n_heavy_hitters=len(heavy), **rec,
         )
         if strategy == "boruvka":
             n_prev = n_before  # true node count of the contracted graph
@@ -913,12 +720,12 @@ def connected_components(
     if labels is None:
         # no edges at all -> empty labeling
         labels = spark.createDataFrame([], schema="node long, comp long")
-        if comp_track:
+        if count.tracked:
             metrics.n_components = 0
-    elif comp_track and m == 0 and comp_count is not None:
+    elif m == 0 and count.tracked:
         # converged (graph emptied or finish kernel ran): the bookkeeping
         # equals countDistinct(comp) of the returned table — exact, free
-        metrics.n_components = comp_count
+        metrics.n_components = count.value
     if checkpointer is not None:
         labels = checkpointer.save_final(labels)
     return labels

@@ -13,6 +13,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DRIVER_MEMORY_CAP_MB = 48 * 1024
+
+
+def _default_driver_memory() -> str:
+    """48g, or a quarter of physical RAM when that is smaller. A local-mode
+    driver heap sized past the box grows until the OS kills the JVM: G1
+    expands the heap rather than collect while under -Xmx."""
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (AttributeError, ValueError, OSError):
+        return f"{_DRIVER_MEMORY_CAP_MB}m"
+    return f"{max(1024, min(_DRIVER_MEMORY_CAP_MB, phys_mb // 4))}m"
+
 
 def get_spark(
     app_name: str = "em_connected_components_spark",
@@ -56,7 +69,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -17,7 +17,7 @@ relation — beyond that a shuffled join wins regardless of heap):
     rows = min(heap_bytes / 32 / 64, 16M) = min(heap_bytes / 2048, 16M)
 
 Examples: 1 GB executor -> ~524k rows; 4 GB -> ~2M (the round-2 VERDICT's
-suggested safe default); this sandbox's 48 GB local driver -> 16M (capped).
+suggested safe default); a 48 GB local driver -> 16M (capped).
 
 Override knob: ``spark.emcc.broadcast.maxRows`` (runtime conf) pins the bound
 explicitly — deployments with measured headroom raise it, tests lower it.

@@ -99,12 +99,17 @@ def test_rmat_vs_unionfind_oracle(spark):
 def test_local_vs_distributed_pointer_jump(spark):
     # same labels whichever side of the jump_local_threshold we land on
     edges = canonicalize(gen.rmat(spark, scale=9, edge_factor=4, seed=8))
-    a = connected_components(edges, small_graph_threshold=0,
-                             pre_canonicalized=True, jump_local_threshold=0)
-    b = connected_components(edges, small_graph_threshold=0,
-                             pre_canonicalized=True,
-                             jump_local_threshold=10**9)
+    a, ma = connected_components_metrics(
+        edges, small_graph_threshold=0, pre_canonicalized=True,
+        jump_local_threshold=0,
+    )
+    b, mb = connected_components_metrics(
+        edges, small_graph_threshold=0, pre_canonicalized=True,
+        jump_local_threshold=10**9,
+    )
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    assert {r["jump"] for r in ma.rounds} == {"doubling"}
+    assert {r["jump"] for r in mb.rounds} == {"local"}
 
 
 def test_targets_reduced_jump_agrees(spark):
@@ -114,7 +119,6 @@ def test_targets_reduced_jump_agrees(spark):
     from em_connected_components_spark.plans.connected_components import (
         _pointer_jump,
         _pointer_jump_targets,
-        _release_jump_cache,
     )
 
     # parent tables: a depth-20 chain, a star, and a hook forest from rMAT
@@ -140,7 +144,7 @@ def test_targets_reduced_jump_agrees(spark):
                 parents, targets, broadcast_resolved=bcast
             )
             assert sorted(map(tuple, got.collect())) == want
-            _release_jump_cache(got)
+            got.unpersist()
 
 
 def test_targets_jump_route_in_cc(spark):
@@ -158,11 +162,12 @@ def test_targets_jump_route_in_cc(spark):
     assert t < n  # hook forests always shrink the comp set
     thr = (t + n) // 2
     edge_rows = [(r["src"], r["dst"]) for r in edges.collect()]
-    labels = connected_components(
+    labels, metrics = connected_components_metrics(
         edges, small_graph_threshold=0, pre_canonicalized=True,
         jump_local_threshold=thr,
     )
     assert _partition(labels) == python_union_find(edge_rows)
+    assert metrics.rounds[0]["jump"] == "targets"
 
 
 def test_semi_external_switch_agrees(spark):
@@ -207,36 +212,6 @@ def test_metrics_and_convergence(spark):
             assert r["m_next"] < r["m"]  # monotone edge shrink
 
 
-@pytest.mark.parametrize("small_threshold", [
-    # this gilbert's measured round profile: m=[3000,1087,334,51],
-    # hook-parent t_est~[1600,440,75,..]. The fuse fires when
-    # t_est <= threshold < m, so:
-    2500,  # fires on round 0 — labels still None
-    700,   # fires on round 1 — exercises the compose-with-prior-labels path
-])
-def test_fused_finish_agrees(spark, small_threshold):
-    # opt-in fused finish (contract piped straight into the one-task kernel,
-    # BENCH/fuse_ab.json) must produce the identical partition as the default
-    # unfused tail — both when it fires on round 0 and on a later round.
-    edges = canonicalize(gen.gilbert(spark, n=4000, avg_degree=1.5, seed=7))
-    from em_connected_components_spark.plans.connected_components import (
-        CCMetrics,
-    )
-
-    metrics = CCMetrics()
-    fused = connected_components(
-        edges, small_graph_threshold=small_threshold,
-        pre_canonicalized=True, fuse_finish=True, metrics=metrics,
-    )
-    plain = connected_components(
-        edges, small_graph_threshold=small_threshold, pre_canonicalized=True,
-    )
-    assert _partition(fused) == _partition(plain)
-    _assert_star_map(fused)
-    # the fused route must actually have fired, else this test is vacuous
-    assert any(r.get("fused_finish") for r in metrics.rounds)
-
-
 @pytest.mark.parametrize(
     "maker, small_threshold",
     [
@@ -263,7 +238,7 @@ def test_n_components_metric_exact(spark, maker, small_threshold):
     assert metrics.n_components == want
 
 
-def test_n_components_metric_fused_and_star(spark):
+def test_n_components_metric_star(spark):
     from em_connected_components_spark.plans.connected_components import (
         CCMetrics,
         connected_components,
@@ -271,21 +246,35 @@ def test_n_components_metric_fused_and_star(spark):
     from em_connected_components_spark.plans.policy import Policy
 
     edges = canonicalize(gen.gilbert(spark, n=4000, avg_degree=1.5, seed=7))
-    # fused finish path
-    m1 = CCMetrics()
-    lbl = connected_components(
-        edges, small_graph_threshold=700, pre_canonicalized=True,
-        fuse_finish=True, metrics=m1,
-    )
-    assert any(r.get("fused_finish") for r in m1.rounds)
-    assert m1.n_components == lbl.select("comp").distinct().count()
     # star-contraction rounds mixed in via an always-star policy
-    m2 = CCMetrics()
+    m = CCMetrics()
     pol = Policy(star_density=1e9, small_graph_edges=0)
-    lbl2 = connected_components(edges, metrics=m2, policy=pol,
-                                pre_canonicalized=True)
-    assert any(r["kind"] == "star_superstep" for r in m2.rounds)
-    assert m2.n_components == lbl2.select("comp").distinct().count()
+    lbl = connected_components(edges, metrics=m, policy=pol,
+                               pre_canonicalized=True)
+    assert any(r["kind"] == "star_superstep" for r in m.rounds)
+    assert m.n_components == lbl.select("comp").distinct().count()
+
+
+def test_n_components_unobserved_is_recorded(spark, monkeypatch):
+    # a finish root count Spark left unobserved is recorded on the finish
+    # record and leaves n_components None, instead of being swallowed
+    from em_connected_components_spark.plans import connected_components as cc
+
+    observed = cc._observed
+    monkeypatch.setattr(
+        cc, "_observed",
+        lambda obs, name: None if name == "r_fin" else observed(obs, name),
+    )
+    edges = canonicalize(gen.gilbert(spark, n=400, avg_degree=1.5, seed=3))
+    labels, metrics = connected_components_metrics(
+        edges, small_graph_threshold=10**9, pre_canonicalized=True
+    )
+    (fin,) = [r for r in metrics.rounds if r["kind"] == "unionfind_finish"]
+    assert fin["n_components_unobserved"] is True
+    assert metrics.n_components is None
+    assert _partition(labels) == python_union_find(
+        [(r["src"], r["dst"]) for r in edges.collect()]
+    )
 
 
 def test_n_components_metric_none_when_not_converged(spark):
