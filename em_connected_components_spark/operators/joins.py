@@ -6,9 +6,10 @@ broadcast vs sort-merge per round and splits skewed partitions at runtime.
 
 Skew note (the reference never faces this — it scans sequentially): once a
 giant component forms, the label side of a relabel join is dominated by one
-``comp`` value. We rely on AQE skew-join splitting plus an optional explicit
-salt (``relabel`` with ``salt_buckets``) for the pathological hub case, per
-BASELINE.json north_star.
+``comp`` value. We rely on AQE skew-join splitting plus the heavy-hitter
+split (``relabel_heavy_split``) for the pathological hub case, per
+BASELINE.json north_star; a replicated-salt join measured about 3x slower
+than the split (BENCH/salting.json).
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ def relabel(
     labels: DataFrame,
     column: str,
     broadcast_labels: bool = False,
-    salt_buckets: int = 0,
 ) -> DataFrame:
     """LEFT-OUTER relabel of one endpoint through a (node, comp) map.
 
@@ -33,36 +33,12 @@ def relabel(
     join edges.<column> = labels.node, project coalesce(labels.comp, old).
     The reference's "resort by target" between the two passes is just a
     different shuffle key here.
-
-    ``salt_buckets > 0`` splits hot join keys: each edge picks a deterministic
-    salt from its full (src, dst) pair, the label side is replicated
-    ``salt_buckets`` times, and the join runs on (node, salt) — so a hub node
-    with millions of incident edges spreads over ``salt_buckets`` reducers
-    instead of one. Only worth it when the label side is small enough to
-    replicate (late rounds); AQE skew splitting covers the common case.
     """
     other = "dst" if column == "src" else "src"
     lab = labels.select(F.col("node").alias("__n"), F.col("comp").alias("__c"))
-    if salt_buckets > 0:
-        salts = edges.sparkSession.range(salt_buckets).select(
-            F.col("id").cast("int").alias("__salt")
-        )
-        lab = lab.crossJoin(salts)
-        if broadcast_labels:
-            lab = F.broadcast(lab)
-        e = edges.withColumn(
-            "__salt",
-            F.pmod(F.xxhash64("src", "dst"), F.lit(salt_buckets)).cast("int"),
-        )
-        out = e.join(
-            lab,
-            on=(e[column] == lab["__n"]) & (e["__salt"] == lab["__salt"]),
-            how="left",
-        )
-    else:
-        if broadcast_labels:
-            lab = F.broadcast(lab)
-        out = edges.join(lab, on=edges[column] == lab["__n"], how="left")
+    if broadcast_labels:
+        lab = F.broadcast(lab)
+    out = edges.join(lab, on=edges[column] == lab["__n"], how="left")
     return out.select(F.coalesce("__c", column).alias(column), other).select(
         "src", "dst"
     )
@@ -107,7 +83,6 @@ def contract(
     edges: DataFrame,
     labels: DataFrame,
     broadcast_labels: bool = False,
-    salt_buckets: int = 0,
     heavy_hitters: list[tuple[int, int]] | None = None,
 ) -> DataFrame:
     """Full edge contraction under a star map (cpp/contraction.hpp:83-121).
@@ -119,8 +94,7 @@ def contract(
     ``heavy_hitters``: (node, comp) rows of detected mega-hubs — both
     relabel passes split them onto a literal-map fast path
     (``relabel_heavy_split``); engaged by the CC loop's max-degree trigger
-    on the non-broadcast path. ``salt_buckets`` remains the generic salted
-    join for the (rare) case of too many hot keys to inline.
+    on the non-broadcast path.
     """
     if heavy_hitters:
         e = relabel_heavy_split(
@@ -130,8 +104,8 @@ def contract(
             e, labels, "dst", heavy_hitters, broadcast_labels
         )
     else:
-        e = relabel(edges, labels, "src", broadcast_labels, salt_buckets)
-        e = relabel(e, labels, "dst", broadcast_labels, salt_buckets)
+        e = relabel(edges, labels, "src", broadcast_labels)
+        e = relabel(e, labels, "dst", broadcast_labels)
     return canonicalize(e)
 
 

@@ -73,15 +73,15 @@ class CCMetrics:
         self.rounds.append(kw)
 
 
-def _observed(obs: Observation, name: str) -> int | None:
-    """One metric of an Observation whose action has run, or None when it
-    is missing: when the optimizer prunes the observed node (a statically
-    empty input), Spark completes the Observation with an empty row, which
+def _observed(obs: Observation, name: str) -> int | float | None:
+    """One metric of an Observation whose action has run, as Spark returns it
+    (a long column as int, a double as float), or None when it is missing:
+    when the optimizer prunes the observed node (a statically empty input),
+    Spark completes the Observation with an empty row, which
     ``Observation.get`` cannot convert."""
     if obs._jo.getRow().length() == 0:
         return None
-    value = obs.get[name]
-    return None if value is None else int(value)
+    return obs.get[name]
 
 
 def _hook_parents(edges: DataFrame) -> DataFrame:

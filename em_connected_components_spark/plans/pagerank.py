@@ -1,20 +1,18 @@
-"""PageRank — iterative DataFrame power iteration + a CSR/SpMV pandas-UDF path.
+"""PageRank — one DataFrame power-iteration loop, two contribution kernels.
 
 No reference counterpart (the reference computes only connected components);
 required by the graft contract (BASELINE.json north_star: "PageRank runs as
 CSR-partitioned sparse gather-scatter SpMV in pandas UDFs", scores matching
 NumPy within allclose 1e-6 at convergence).
 
-Two interchangeable executors over the same (src, dst) edge table:
+Both executors run ``_power_iterate``: base table, dangling mass, update rule,
+L1 delta, check-boundary stop and release. They differ only in how one
+iteration sums the rank shares per destination:
 
-* ``pagerank`` — pure DataFrame: contributions = ranks ⋈ edges, groupBy(dst)
-  sum, damping + dangling-mass redistribution. Every step is JVM-side,
-  map-side combined, AQE-planned. This is the default and the 100 TB path:
-  the only state between iterations is the (node, rank) table.
-* ``pagerank_spmv`` — gather-scatter in Arrow-batched pandas UDFs: edges are
-  hash-bucketed by dst once, each bucket aggregates src-rank contributions
-  with numpy (the CSR shape named by the contract). Demonstrates the custom-
-  operator escape hatch; same convergence and results within 1e-12.
+* ``pagerank`` — a JVM join on src and groupBy(dst) sum, map-side combined
+  and AQE-planned. The default and the 100 TB path.
+* ``pagerank_spmv`` — a numpy gather (``np.add.at``, the CSR shape named by
+  the contract) in Arrow-batched pandas UDFs over dst hash buckets.
 
 Semantics (both): directed edges, uniform teleport, dangling mass spread
 uniformly; rank vector sums to 1 every iteration.
@@ -24,9 +22,17 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ..tuning import broadcast_row_bound
+from .connected_components import _observed
+
+#: dst hash buckets of ``pagerank_spmv``: the unit of parallelism of the
+#: gather, so skewed destinations spread across tasks by bucket, not by key
+SPMV_BUCKETS = 32
 
 
 @dataclass
@@ -37,7 +43,8 @@ class PRMetrics:
         self.iterations.append(kw)
 
 
-def _nodes_and_degrees(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+def _base(edges: DataFrame) -> tuple[DataFrame, int]:
+    """The persisted (node, out_deg) table of every endpoint, and its size."""
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
@@ -46,73 +53,39 @@ def _nodes_and_degrees(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     out_deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("out_deg")
     )
-    return nodes, out_deg
-
-
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    max_iters: int = 40,
-    tol: float = 1e-9,
-    check_every: int = 5,
-    metrics: PRMetrics | None = None,
-    broadcast_threshold_rows: int | None = None,
-    pre_partitioned: bool = False,
-) -> DataFrame:
-    """(node, rank) after power iteration; stops when L1 delta < tol.
-
-    Per iteration: one join (ranks ⋈ edges on src) + one groupBy(dst) — the
-    minimal shuffle count for distributed SpMV. The rank table is
-    localCheckpoint'ed to keep the plan flat. Dangling mass is computed with a
-    left-anti-join-free trick: total rank of nodes with out_deg null.
-
-    Join strategy (the PageRank analogue of CC's semi-external switch): when
-    the node count fits ``broadcast_threshold_rows`` the ranks side is
-    broadcast — the edge table is never shuffled OR sorted, each iteration is
-    map-side join + one partial-agged exchange. Above it, the edge table's
-    pinned hash partitioning on src feeds a shuffled-hash join (session
-    default prefers SHJ over SMJ) that only exchanges + hash-builds the
-    ranks side — the m-row side is never sorted.
-    """
-    spark = edges.sparkSession
-    metrics = metrics if metrics is not None else PRMetrics()
-    if broadcast_threshold_rows is None:
-        # byte-gated like the CC relabel joins (tuning.broadcast_row_bound):
-        # the forced hint never exceeds what the participating heaps hold
-        from ..tuning import broadcast_row_bound
-
-        broadcast_threshold_rows = broadcast_row_bound(spark)
-
-    # Pin the edge table PRE-PARTITIONED on the join key: the per-iteration
-    # ranks-join then reuses the cached hash partitioning (Catalyst sees
-    # HashPartitioning(src) on the cached side), so only the small ranks
-    # table shuffles each iteration — the m-row table never re-exchanges.
-    # ``pre_partitioned=True`` skips even that one-time exchange: the caller
-    # attests the input already carries HashPartitioning(src) — e.g. a
-    # src-bucketed EdgeCatalog table (sources/catalog.py write_bucketed),
-    # whose on-disk layout the scan exposes directly.
-    sp = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    if not pre_partitioned:
-        edges = edges.repartition(sp, "src")
-    edges = edges.persist()
-    nodes, out_deg = _nodes_and_degrees(edges)
     base = nodes.join(out_deg, on="node", how="left").select(
         "node", F.coalesce("out_deg", F.lit(0)).alias("out_deg")
-    )
-    base = base.persist()
-    n = base.count()
-    if n == 0:
-        return spark.createDataFrame([], schema="node long, rank double")
+    ).persist()
+    return base, base.count()
 
+
+def _power_iterate(
+    base: DataFrame,
+    n: int,
+    contribs: Callable[[DataFrame], DataFrame],
+    damping: float,
+    max_iters: int,
+    tol: float,
+    check_every: int,
+    metrics: PRMetrics | None,
+) -> DataFrame:
+    """(node, rank) after power iteration from the uniform vector.
+
+    ``contribs(shares)`` maps the (src, share) table to (node, contrib), the
+    summed shares per destination. The rank table is localCheckpoint'ed each
+    iteration to keep the plan flat. Releases ``base``.
+    """
+    if n == 0:
+        base.unpersist()
+        return base.select("node", F.lit(0.0).alias("rank"))
+    metrics = metrics if metrics is not None else PRMetrics()
     ranks = base.select("node", F.lit(1.0 / n).alias("rank"), "out_deg")
     ranks = ranks.localCheckpoint(eager=True)
 
     for it in range(max_iters):
         t0 = time.time()
-        # dangling mass as a broadcast 1-row relation rather than a driver
-        # .collect(): the scalar agg rides the same Spark job as the rank
-        # update (one action per iteration instead of two — halves the
-        # per-iteration job count, which is pure serial overhead at scale)
+        # dangling mass as a broadcast 1-row relation: the scalar agg rides
+        # the rank update's job instead of a driver collect
         dangling = F.broadcast(
             ranks.filter(F.col("out_deg") == 0).agg(
                 F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
@@ -122,22 +95,11 @@ def pagerank(
             F.col("node").alias("src"),
             (F.col("rank") / F.col("out_deg")).alias("share"),
         )
-        if n <= broadcast_threshold_rows:
-            shares = F.broadcast(shares)
-        contribs = (
-            edges.join(shares, on="src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("share").alias("contrib"))
-        )
-        # The update joins contribs onto the PREVIOUS rank table (not the
-        # rank-free `base`): same cardinality, and carrying the old rank
-        # through lets the L1 convergence delta ride the checkpoint job as
-        # an Observation — the separate ranks⋈new_ranks join + .collect()
-        # action that used to run every `check_every` iterations is gone
-        # (the same fusion that removed CC's m_next job; VERDICT r4 #2).
+        # joining onto the PREVIOUS ranks (not `base`) carries the old rank
+        # through, so the L1 delta rides the checkpoint job as an Observation
         upd = (
             ranks.withColumnRenamed("rank", "__prev")
-            .join(contribs, on="node", how="left")
+            .join(contribs(shares), on="node", how="left")
             .crossJoin(dangling)
             .select(
                 "node",
@@ -151,45 +113,66 @@ def pagerank(
             )
         )
         obs = Observation()
-        upd = upd.observe(
+        ranks = upd.observe(
             obs, F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("l1")
-        )
-        new_ranks = upd.select("node", "rank", "out_deg").localCheckpoint(
-            eager=True
-        )
-        try:
-            observed_delta = float(obs.get["l1"])
-        except Exception:
-            # ultra-defensive: if the observation node is ever optimized
-            # away, recompute the delta with the pre-fusion join (rare/never
-            # in practice — kept for parity with CC's m_next fallback)
-            observed_delta = (
-                new_ranks.select("node", "rank")
-                .join(
-                    ranks.select("node", F.col("rank").alias("prev")), on="node"
-                )
-                .agg(F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("d"))
-                .collect()[0]["d"]
-            )
-
-        # stopping behavior is IDENTICAL to the unfused plan: the delta is
-        # only consulted at check_every boundaries (and the last iteration),
-        # exactly where the old code computed it — it is merely free now,
-        # so metrics can record it every iteration
-        delta = None
-        if (it + 1) % check_every == 0 or it == max_iters - 1:
-            delta = observed_delta
+        ).select("node", "rank", "out_deg").localCheckpoint(eager=True)
+        # The delta is known every iteration but consulted only at
+        # check_every boundaries and the last iteration. A delta Spark left
+        # unobserved is recorded and never counts as converged.
+        l1 = _observed(obs, "l1")
+        at_check = (it + 1) % check_every == 0 or it == max_iters - 1
+        delta = l1 if at_check else None
         metrics.add(
             iteration=it, wall_sec=time.time() - t0, l1_delta=delta,
-            observed_l1=observed_delta,
+            observed_l1=l1, l1_unobserved=l1 is None,
         )
-        ranks = new_ranks
         if delta is not None and delta < tol:
             break
 
     base.unpersist()
-    edges.unpersist()
     return ranks.select("node", "rank")
+
+
+def pagerank(
+    edges: DataFrame,
+    damping: float = 0.85,
+    max_iters: int = 40,
+    tol: float = 1e-9,
+    check_every: int = 5,
+    metrics: PRMetrics | None = None,
+    pre_partitioned: bool = False,
+) -> DataFrame:
+    """(node, rank) after power iteration; stops when L1 delta < tol.
+
+    Per iteration: one join (shares ⋈ edges on src) and one groupBy(dst), the
+    minimal shuffle count for distributed SpMV. When the node count fits
+    ``tuning.broadcast_row_bound`` (byte-gated like the CC relabel joins) the
+    shares side is broadcast and the edge table is never shuffled or sorted.
+    Above it, the edge table's pinned hash partitioning on src feeds a
+    shuffled-hash join that exchanges only the shares side.
+    """
+    spark = edges.sparkSession
+    # Pin the edge table's hash partitioning on src once, so each iteration
+    # shuffles only the shares. ``pre_partitioned=True``: the caller attests
+    # the input already carries it (a src-bucketed EdgeCatalog table).
+    if not pre_partitioned:
+        sp = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        edges = edges.repartition(sp, "src")
+    edges = edges.persist()
+    base, n = _base(edges)
+    broadcast = n <= broadcast_row_bound(spark)
+
+    def contribs(shares: DataFrame) -> DataFrame:
+        return (
+            edges.join(F.broadcast(shares) if broadcast else shares, on="src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum("share").alias("contrib"))
+        )
+
+    ranks = _power_iterate(base, n, contribs, damping, max_iters, tol,
+                           check_every, metrics)
+    edges.unpersist()
+    return ranks
 
 
 def pagerank_spmv(
@@ -198,114 +181,36 @@ def pagerank_spmv(
     max_iters: int = 40,
     tol: float = 1e-9,
     check_every: int = 5,
-    num_buckets: int = 32,
 ) -> DataFrame:
-    """PageRank where the gather-scatter runs as numpy inside applyInPandas.
-
-    Edges are bucketed once by hash(dst); each iteration ships (src_rank-
-    joined) edge buckets through an Arrow batch where numpy does the
-    per-destination accumulation (np.add.at — the CSR gather). The bucket is
-    the unit of parallelism, so skewed destinations spread across tasks by
-    bucket count, not by key.
-    """
+    """PageRank whose per-destination sum runs as numpy in applyInPandas:
+    edges are bucketed once by hash(dst), and each iteration ships the
+    share-joined buckets through Arrow batches to ``np.add.at``."""
     import numpy as np
     import pandas as pd
 
-    spark = edges.sparkSession
-    nodes, out_deg = _nodes_and_degrees(edges)
-    base = (
-        nodes.join(out_deg, on="node", how="left")
-        .select("node", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
-        .persist()
-    )
-    n = base.count()
-    if n == 0:
-        return spark.createDataFrame([], schema="node long, rank double")
-
+    base, n = _base(edges)
     bucketed = edges.withColumn(
-        "bucket", F.pmod(F.xxhash64("dst"), F.lit(num_buckets)).cast("int")
+        "bucket", F.pmod(F.xxhash64("dst"), F.lit(SPMV_BUCKETS)).cast("int")
     ).persist()
     bucketed.count()
 
-    ranks = base.select("node", F.lit(1.0 / n).alias("rank"), "out_deg")
-    ranks = ranks.localCheckpoint(eager=True)
-
     def gather(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        dst = pdf["dst"].to_numpy()
-        share = pdf["share"].to_numpy()
-        uniq, inv = np.unique(dst, return_inverse=True)
+        uniq, inv = np.unique(pdf["dst"].to_numpy(), return_inverse=True)
         acc = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(acc, inv, share)
+        np.add.at(acc, inv, pdf["share"].to_numpy())
         return pd.DataFrame({"node": uniq, "contrib": acc})
 
-    for it in range(max_iters):
-        # same broadcast-1-row dangling-mass trick as `pagerank` — one
-        # action per iteration, no driver scalar collect
-        dangling = F.broadcast(
-            ranks.filter(F.col("out_deg") == 0).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
-            )
-        )
-        joined = bucketed.join(
-            ranks.filter(F.col("out_deg") > 0).select(
-                F.col("node").alias("src"),
-                (F.col("rank") / F.col("out_deg")).alias("share"),
-            ),
-            on="src",
-        ).select("bucket", "dst", "share")
-        contribs = (
-            joined.groupBy("bucket")
+    def contribs(shares: DataFrame) -> DataFrame:
+        return (
+            bucketed.join(shares, on="src")
+            .select("bucket", "dst", "share")
+            .groupBy("bucket")
             .applyInPandas(gather, schema="node long, contrib double")
             .groupBy("node")
             .agg(F.sum("contrib").alias("contrib"))
         )
-        # same Observation fusion as `pagerank`: the previous rank rides the
-        # update join so the L1 delta is observed on the checkpoint job —
-        # no separate delta join/action at check boundaries
-        upd = (
-            ranks.withColumnRenamed("rank", "__prev")
-            .join(contribs, on="node", how="left")
-            .crossJoin(dangling)
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.col("__dm") / n)
-                ).alias("rank"),
-                "out_deg",
-                "__prev",
-            )
-        )
-        obs = Observation()
-        upd = upd.observe(
-            obs, F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("l1")
-        )
-        new_ranks = upd.select("node", "rank", "out_deg").localCheckpoint(
-            eager=True
-        )
-        ranks_prev = ranks
-        ranks = new_ranks
-        if (it + 1) % check_every == 0 or it == max_iters - 1:
-            try:
-                delta = float(obs.get["l1"])
-            except Exception:
-                delta = (
-                    new_ranks.select("node", "rank")
-                    .join(
-                        ranks_prev.select(
-                            "node", F.col("rank").alias("prev")
-                        ),
-                        on="node",
-                    )
-                    .agg(
-                        F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("d")
-                    )
-                    .collect()[0]["d"]
-                )
-            if delta < tol:
-                break
 
-    base.unpersist()
+    ranks = _power_iterate(base, n, contribs, damping, max_iters, tol,
+                           check_every, None)
     bucketed.unpersist()
-    return ranks.select("node", "rank")
+    return ranks

@@ -42,12 +42,6 @@ class Policy:
     # (kill-injection tests at every boundary in tests/test_checkpoint.py).
     strategy: str = "iterative"
 
-    def should_finish_local(self, m: int) -> bool:
-        return m <= self.small_graph_edges
-
-    def should_broadcast(self, n_labels: int) -> bool:
-        return n_labels <= self.broadcast_rows
-
     def contraction_strategy(self, n: int, m: int) -> str:
         """'boruvka' or 'star' for this round."""
         if self.star_density > 0 and n > 0 and (m / n) < self.star_density:

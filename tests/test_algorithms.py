@@ -105,6 +105,30 @@ def test_pagerank_fused_check_stopping_identical(spark):
     assert m2.iterations[7]["l1_delta"] < tol  # consulted + stopped here
 
 
+def test_pagerank_l1_unobserved_is_recorded(spark, monkeypatch):
+    # an L1 delta Spark left unobserved is recorded on every iteration and
+    # never counts as converged, instead of being swallowed by a recompute
+    from em_connected_components_spark.plans import pagerank as pr
+
+    observed = pr._observed
+    monkeypatch.setattr(
+        pr, "_observed",
+        lambda obs, name: None if name == "l1" else observed(obs, name),
+    )
+    edges = canonicalize(gen.gilbert(spark, n=200, avg_degree=3.0, seed=21))
+    edge_list = [(r["src"], r["dst"]) for r in edges.collect()]
+    m = pr.PRMetrics()
+    ranks = pr.pagerank(edges, max_iters=60, tol=1.0, check_every=1,
+                        metrics=m)
+    got = {r["node"]: r["rank"] for r in ranks.collect()}
+    assert len(m.iterations) == 60
+    assert all(it["l1_unobserved"] is True for it in m.iterations)
+    want = numpy_pagerank(edge_list)
+    assert set(got) == set(want)
+    for u in want:
+        assert abs(got[u] - want[u]) < 1e-6, (u, got[u], want[u])
+
+
 def test_label_propagation_equals_cc(spark):
     edges = canonicalize(gen.gilbert(spark, n=300, avg_degree=1.2, seed=33))
     lp = label_propagation(edges)

@@ -46,14 +46,6 @@ def test_relabel_left_outer_semantics(spark):
     assert got == [(2, 6), (100, 5)]
 
 
-def test_relabel_salted_matches_plain(spark):
-    e = canonicalize(gen.gilbert(spark, 200, 2.0, seed=5))
-    lab = _labels(spark, [(i, i % 7 + 1) for i in range(1, 201)])
-    plain = sorted(map(tuple, relabel(e, lab, "dst").collect()))
-    salted = sorted(map(tuple, relabel(e, lab, "dst", salt_buckets=4).collect()))
-    assert plain == salted
-
-
 def test_contract(spark):
     # triangle 1-2-3 plus pendant 4; map {2->1, 3->1}
     e = _edges(spark, [(1, 2), (2, 3), (1, 3), (3, 4)])

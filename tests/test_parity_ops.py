@@ -210,9 +210,7 @@ def test_max_hook_variant_same_partition(spark):
 
 
 def test_policy_decisions():
-    pol = Policy(small_graph_edges=100, broadcast_rows=10, star_density=4.0)
-    assert pol.should_finish_local(100) and not pol.should_finish_local(101)
-    assert pol.should_broadcast(10) and not pol.should_broadcast(11)
+    pol = Policy(star_density=4.0)
     assert pol.contraction_strategy(100, 300) == "star"  # m/n = 3 < 4
     assert pol.contraction_strategy(100, 500) == "boruvka"
     assert Policy.sample_power(100, 1600) == 4

@@ -187,11 +187,14 @@ def main() -> None:
         forbid=["Exchange"],
     )
 
-    # 11. incremental CC: the n-row label table is scanned, never shuffled —
-    # every join against it is an explicit-hint broadcast (semi-join slice,
-    # relabels, anti, compose). Auto-broadcast disabled so only the engine's
-    # own byte-gated hints can produce a broadcast: any SortMergeJoin here
-    # would mean a full label shuffle leaked back in.
+    # 11-12. incremental CC: below the byte gate the n-row label table is
+    # scanned, never shuffled — every join against it is an explicit-hint
+    # broadcast (incremental.py module docstring). Auto-broadcast is disabled
+    # so only the engine's own byte-gated hints can produce a broadcast, and
+    # BOTH shuffle join kinds are forbidden (the session prefers ShuffledHash
+    # over SortMerge, so a leaked label shuffle would surface as either).
+    # Each path is audited on the plan it returns; joins that feed a
+    # materialized (checkpointed) input do not appear in it.
     from em_connected_components_spark.plans.incremental import (
         incremental_connected_components,
     )
@@ -207,26 +210,36 @@ def main() -> None:
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    # The inner delta solve goes down the single-task kernel path (default
-    # small_graph_threshold — a streaming micro-batch always fits), so the
-    # kernel contributes NO joins and every join in the composed plan is one
-    # of the five label-touching ones: slice carve (LeftSemi), fresh-node
-    # complement (LeftAnti), two relabels, compose. Forbidding BOTH shuffle
-    # join kinds (the session prefers ShuffledHash over SortMerge, so a
-    # leaked label shuffle would surface as either) machine-checks the
-    # incremental plan's central claim (incremental.py:64-78): below the
-    # byte gate the n-row label table is scanned, never exchanged.
+    # Default: the batch fits small_graph_threshold, so the fold takes the
+    # single-task kernel path. The slice semi-join feeds the checkpointed
+    # numpy task, so the returned plan holds ONE label-table join: the
+    # broadcast left-outer apply of the old-rep -> new-comp map.
     audit(
-        "incremental CC (label table scanned, never shuffled)",
+        "incremental CC, kernel path (label table scanned, never shuffled)",
         incremental_connected_components(big_labels, delta),
-        ["BroadcastHashJoin", "LeftSemi", "LeftAnti"],
-        "a crawl-delta fold touches the n-row star map only through "
-        "broadcast-built joins (slice semi-join, fresh-node anti, relabels, "
+        ["BroadcastHashJoin", "LeftOuter"],
+        "a crawl-delta fold that fits the kernel touches the n-row star map "
+        "through one broadcast-built left-outer join (the rep map applied "
+        "over a checkpoint of the numpy task's output); auto-broadcast is "
+        "disabled here, so the broadcast is the engine's own byte-gated "
+        "hint, and ANY shuffle join would be a label-side leak — both kinds "
+        "are forbidden",
+        forbid=["SortMergeJoin", "ShuffledHashJoin"],
+    )
+    # small_graph_threshold=0: the distributed path. Its relabels feed the
+    # inner solve, whose result is materialized, so the returned plan holds
+    # the slice carve (LeftSemi), the fresh-node complement (LeftAnti) and
+    # the compose (LeftOuter).
+    audit(
+        "incremental CC, distributed path (label table scanned, never "
+        "shuffled)",
+        incremental_connected_components(big_labels, delta,
+                                         small_graph_threshold=0),
+        ["BroadcastHashJoin", "LeftSemi", "LeftAnti", "LeftOuter"],
+        "above the kernel gate the fold touches the n-row star map only "
+        "through broadcast-built joins (slice semi-join, fresh-node anti, "
         "compose); the only exchanges are on the batch-bounded delta side. "
-        "Auto-broadcast is disabled here, so every broadcast in the plan is "
-        "the engine's own byte-gated hint; with the inner solve on the "
-        "kernel path, ANY shuffle join in this plan would be a label-side "
-        "leak — both kinds are forbidden",
+        "Both shuffle join kinds are forbidden, as on the kernel path",
         forbid=["SortMergeJoin", "ShuffledHashJoin"],
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
