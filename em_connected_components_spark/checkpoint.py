@@ -21,12 +21,11 @@ delete-then-rename fallback for stores without an AbstractFileSystem binding
 
 from __future__ import annotations
 
+import copy
 import json
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-
-_MANIFEST = "manifest.json"
 
 
 class _HadoopFS:
@@ -111,6 +110,59 @@ def _join(*parts: str) -> str:
     return "/".join(s.rstrip("/") for s in parts)
 
 
+class Manifest:
+    """One JSON manifest file ``name`` under ``root``, and the tables it
+    points at: the single implementation of the commit every durable
+    writer in the engine uses (round and phase checkpoints, streaming label
+    versions).
+
+    ``read()`` returns the committed manifest, or a copy of ``default``
+    before the first commit. ``commit()`` writes ``{name}.tmp`` and renames
+    it over the manifest (``_HadoopFS.rename_overwrite``) — the commit
+    point: a reader sees the old manifest or the new one, never a partial
+    write. ``lineage()`` lists a written table's parquet part files.
+    """
+
+    def __init__(
+        self, spark: SparkSession, root: str, name: str, default: dict | None
+    ):
+        self.root = root
+        self.fs = _HadoopFS(spark, root)
+        self.path = _join(root, name)
+        self._default = default
+
+    def at(self, *parts: str) -> str:
+        """A path under the root."""
+        return _join(self.root, *parts)
+
+    def read(self) -> dict | None:
+        if not self.fs.exists(self.path):
+            return copy.deepcopy(self._default)
+        return json.loads(self.fs.read_bytes(self.path).decode("utf-8"))
+
+    def commit(self, manifest: dict) -> None:
+        tmp = self.path + ".tmp"
+        self.fs.write_bytes(tmp, json.dumps(manifest, indent=2).encode())
+        self.fs.rename_overwrite(tmp, self.path)
+
+    def lineage(self, table_dir: str) -> list[dict]:
+        """Per-partition file lineage for a written table: one entry per
+        parquet part file with its byte size (the Iceberg-manifest analogue —
+        snapshot membership is exactly this file list; north_rule's
+        'per-partition lineage'). Listed through the Hadoop FS, so it works
+        on whatever filesystem Spark just wrote the table to."""
+        return [
+            {"file": name, "bytes": size}
+            for name, size in self.fs.list_files(table_dir)
+            if name.endswith(".parquet")
+        ]
+
+    def clear(self) -> None:
+        """Delete the root with everything under it, then recreate it."""
+        self.fs.delete(self.root, recursive=True)
+        self.fs.mkdirs(self.root)
+
+
 class RoundCheckpointer:
     """Persists (edges, labels) per round under ``root`` and resumes from the
     last completed round. ``root`` may be any Hadoop-resolvable location
@@ -119,36 +171,13 @@ class RoundCheckpointer:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self._fs = _HadoopFS(spark, root)
-        self._fs.mkdirs(root)
-
-    # -- manifest ---------------------------------------------------------
-    def _manifest_path(self) -> str:
-        return _join(self.root, _MANIFEST)
+        self._manifest = Manifest(
+            spark, root, "manifest.json", {"rounds": [], "final": None}
+        )
+        self._manifest.fs.mkdirs(root)
 
     def _read_manifest(self) -> dict:
-        path = self._manifest_path()
-        if not self._fs.exists(path):
-            return {"rounds": [], "final": None}
-        return json.loads(self._fs.read_bytes(path).decode("utf-8"))
-
-    def _write_manifest(self, manifest: dict) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        self._fs.write_bytes(tmp, json.dumps(manifest, indent=2).encode())
-        self._fs.rename_overwrite(tmp, self._manifest_path())  # commit
-
-    # -- rounds -----------------------------------------------------------
-    def _partition_lineage(self, path: str) -> list[dict]:
-        """Per-partition file lineage for a written table: one entry per
-        parquet part file with its byte size (the Iceberg-manifest analogue —
-        snapshot membership is exactly this file list; north_rule's
-        'per-partition lineage'). Listed through the Hadoop FS, so it works
-        on whatever filesystem Spark just wrote the table to."""
-        return [
-            {"file": name, "bytes": size}
-            for name, size in self._fs.list_files(path)
-            if name.endswith(".parquet")
-        ]
+        return self._manifest.read()
 
     def save_round(
         self,
@@ -160,8 +189,8 @@ class RoundCheckpointer:
         """Write both tables, commit the manifest (with per-partition file
         lineage and optional round metrics), return re-read (lineage-free)
         DataFrames."""
-        edir = _join(self.root, f"round={rnd}", "edges")
-        ldir = _join(self.root, f"round={rnd}", "labels")
+        edir = self._manifest.at(f"round={rnd}", "edges")
+        ldir = self._manifest.at(f"round={rnd}", "labels")
         edges.write.mode("overwrite").parquet(edir)
         labels.write.mode("overwrite").parquet(ldir)
         manifest = self._read_manifest()
@@ -172,12 +201,12 @@ class RoundCheckpointer:
                 "edges": edir,
                 "labels": ldir,
                 "ts": time.time(),
-                "edges_files": self._partition_lineage(edir),
-                "labels_files": self._partition_lineage(ldir),
+                "edges_files": self._manifest.lineage(edir),
+                "labels_files": self._manifest.lineage(ldir),
                 "metrics": metrics or {},
             }
         )
-        self._write_manifest(manifest)
+        self._manifest.commit(manifest)
         return self.spark.read.parquet(edir), self.spark.read.parquet(ldir)
 
     def save_final(self, labels: DataFrame) -> DataFrame:
@@ -186,11 +215,11 @@ class RoundCheckpointer:
         # point at the old files.
         manifest = self._read_manifest()
         version = manifest.get("final_version", 0) + 1
-        fdir = _join(self.root, f"final_labels_v{version}")
+        fdir = self._manifest.at(f"final_labels_v{version}")
         labels.write.mode("overwrite").parquet(fdir)
         manifest["final"] = fdir
         manifest["final_version"] = version
-        self._write_manifest(manifest)
+        self._manifest.commit(manifest)
         return self.spark.read.parquet(fdir)
 
     def resume(self) -> tuple[int, DataFrame, DataFrame] | None:
@@ -212,8 +241,7 @@ class RoundCheckpointer:
         return None
 
     def clear(self) -> None:
-        self._fs.delete(self.root, recursive=True)
-        self._fs.mkdirs(self.root)
+        self._manifest.clear()
 
 
 class PhaseCheckpointer:
@@ -234,41 +262,19 @@ class PhaseCheckpointer:
     survive a predecessor rewrite.
     """
 
-    _PHASE_MANIFEST = "phase_manifest.json"
-
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self._fs = _HadoopFS(spark, root)
-        self._fs.mkdirs(root)
-
-    def _manifest_path(self) -> str:
-        return _join(self.root, self._PHASE_MANIFEST)
-
-    def _read_manifest(self) -> dict:
-        path = self._manifest_path()
-        if not self._fs.exists(path):
-            return {"phases": []}
-        return json.loads(self._fs.read_bytes(path).decode("utf-8"))
-
-    def _write_manifest(self, manifest: dict) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        self._fs.write_bytes(tmp, json.dumps(manifest, indent=2).encode())
-        # atomic where the FS provides it — commit point of the phase
-        self._fs.rename_overwrite(tmp, self._manifest_path())
-
-    def _lineage(self, path: str) -> list[dict]:
-        return [
-            {"file": name, "bytes": size}
-            for name, size in self._fs.list_files(path)
-            if name.endswith(".parquet")
-        ]
+        self._manifest = Manifest(
+            spark, root, "phase_manifest.json", {"phases": []}
+        )
+        self._manifest.fs.mkdirs(root)
 
     def completed(self) -> list[str]:
-        return [p["name"] for p in self._read_manifest()["phases"]]
+        return [p["name"] for p in self._manifest.read()["phases"]]
 
     def phase_metrics(self, name: str) -> dict:
-        for p in self._read_manifest()["phases"]:
+        for p in self._manifest.read()["phases"]:
             if p["name"] == name:
                 return p.get("metrics", {})
         raise KeyError(f"phase {name!r} not committed")
@@ -283,10 +289,10 @@ class PhaseCheckpointer:
         file lineage), return re-read (lineage-free) DataFrames by name."""
         dirs: dict[str, str] = {}
         for tname, df in tables.items():
-            tdir = _join(self.root, f"phase={name}", tname)
+            tdir = self._manifest.at(f"phase={name}", tname)
             df.write.mode("overwrite").parquet(tdir)
             dirs[tname] = tdir
-        manifest = self._read_manifest()
+        manifest = self._manifest.read()
         if any(p["name"] == name for p in manifest["phases"]):
             # rewrite: this phase and everything after it are stale
             keep = []
@@ -300,15 +306,15 @@ class PhaseCheckpointer:
                 "name": name,
                 "tables": dirs,
                 "ts": time.time(),
-                "files": {t: self._lineage(d) for t, d in dirs.items()},
+                "files": {t: self._manifest.lineage(d) for t, d in dirs.items()},
                 "metrics": metrics or {},
             }
         )
-        self._write_manifest(manifest)
+        self._manifest.commit(manifest)  # commit point of the phase
         return {t: self.spark.read.parquet(d) for t, d in dirs.items()}
 
     def load_phase(self, name: str) -> dict[str, DataFrame]:
-        for p in self._read_manifest()["phases"]:
+        for p in self._manifest.read()["phases"]:
             if p["name"] == name:
                 return {
                     t: self.spark.read.parquet(d)
@@ -317,5 +323,4 @@ class PhaseCheckpointer:
         raise KeyError(f"phase {name!r} not committed")
 
     def clear(self) -> None:
-        self._fs.delete(self.root, recursive=True)
-        self._fs.mkdirs(self.root)
+        self._manifest.clear()

@@ -102,7 +102,12 @@ def _hook_parents(edges: DataFrame) -> DataFrame:
     )
 
 
-def _pointer_jump(parents: DataFrame, max_iters: int = 64) -> DataFrame:
+#: bound on path-doubling iterations: each doubles the hop length, so 64
+#: covers any chain over long node ids
+JUMP_MAX_ITERS = 64
+
+
+def _pointer_jump(parents: DataFrame) -> DataFrame:
     """Iterate comp <- parent(comp) by path doubling until fixpoint.
 
     Replaces the reference's sequential time-forward PQ walk
@@ -118,7 +123,7 @@ def _pointer_jump(parents: DataFrame, max_iters: int = 64) -> DataFrame:
     """
     p = parents
     prev_cache: DataFrame | None = None
-    for _ in range(max_iters):
+    for _ in range(JUMP_MAX_ITERS):
         q = p.select(F.col("node").alias("__qn"), F.col("comp").alias("__qc"))
         joined = (
             p.join(q, on=p["comp"] == q["__qn"], how="left")
@@ -146,7 +151,7 @@ def _pointer_jump(parents: DataFrame, max_iters: int = 64) -> DataFrame:
 
 
 def _single_task_map(
-    df: DataFrame, fn, out_cols: tuple[str, ...], out_partitions: int = 0,
+    df: DataFrame, fn, out_cols: tuple[str, ...],
     single_partition: str = "shuffle",
 ) -> DataFrame:
     """Run a whole-table numpy kernel as ONE executor task via mapInPandas.
@@ -195,52 +200,7 @@ def _single_task_map(
             )
 
     one = df.coalesce(1) if single_partition == "coalesce" else df.repartition(1)
-    out = one.mapInPandas(run, schema=", ".join(f"{c} long" for c in out_cols))
-    if out_partitions > 1:
-        # fan the single-partition kernel output back out so downstream
-        # consumers (cache fill, compose joins, checkpoint writes) run
-        # parallel instead of inheriting the 1-partition layout
-        out = out.repartition(out_partitions)
-    return out
-
-
-def _pointer_jump_targets(
-    parents: DataFrame,
-    targets: DataFrame,
-    *,
-    broadcast_resolved: bool = True,
-) -> DataFrame:
-    """Jump via the comp-closure: solve roots for the DISTINCT comp values
-    only, then apply them to every node with ONE probe join.
-
-    Chains only ever pass through nodes that occur as a comp value (each hop
-    lands on some row's comp), and that target set T is closed under the
-    parent map (a target's own comp is again a comp value), so the root of
-    every node is root_T(P[node]) where root_T is the fixpoint of P
-    restricted to T. On hub-heavy graphs |T| << n (773k of 4.6M on the s23
-    bench graph) — small enough for the single-task numpy kernel long after
-    the full table outgrew it. The cost is one tiny fixed-cost kernel task
-    (fixpoint exact by construction — no pending check, no fallback pass)
-    and one fully parallel probe join.
-
-    ``targets`` must be the distinct comp values as a (node) column.
-    """
-    from ..operators.numpy_cc import jump_to_roots_numpy
-
-    p_t = parents.join(targets, on="node", how="left_semi")
-    resolved = _single_task_map(
-        p_t.select("node", "comp"), jump_to_roots_numpy, ("node", "comp")
-    )
-    r = resolved.select(F.col("node").alias("__t"), F.col("comp").alias("__r"))
-    if broadcast_resolved:
-        r = F.broadcast(r)
-    out = (
-        parents.join(r, on=parents["comp"] == r["__t"], how="left")
-        .select("node", F.coalesce("__r", "comp").alias("comp"))
-        .persist()
-    )
-    out.count()
-    return out
+    return one.mapInPandas(run, schema=", ".join(f"{c} long" for c in out_cols))
 
 
 def _pointer_jump_local(parents: DataFrame) -> DataFrame:
@@ -252,67 +212,26 @@ def _pointer_jump_local(parents: DataFrame) -> DataFrame:
     the same work in milliseconds inside a mapInPandas stage — no driver
     involvement, no driver-local spill files (cluster-safe).
 
-    The dispatcher always passes a projection of the (persisted,
+    ``_hook_and_jump`` passes a projection of the (persisted,
     agg-materialized) hook output, so the single partition comes from
     coalesce(1): the kernel task reads the cached blocks directly instead of
-    paying a repartition shuffle stage per round.
+    paying a repartition shuffle stage per round. The kernel's output is
+    fanned back out to the shuffle partitions, so downstream consumers
+    (cache fill, compose joins, checkpoint writes) run parallel instead of
+    inheriting the 1-partition layout.
     """
     from ..operators.numpy_cc import jump_to_roots_numpy
 
     sp = int(
         parents.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    return _single_task_map(
+    out = _single_task_map(
         parents.select("node", "comp"),
         jump_to_roots_numpy,
         ("node", "comp"),
-        out_partitions=sp,
         single_partition="coalesce",
     )
-
-
-def _dispatch_jump(
-    parents: DataFrame,
-    n_before: int,
-    *,
-    t_est: int,
-    jump_local_threshold: int,
-    broadcast_threshold_rows: int,
-) -> tuple[DataFrame, str]:
-    """Pick the pointer-jump plan by the measured size rule; return the
-    materialized (node, comp) root labels and the plan's name.
-
-    The three plans, in the order the rule tries them:
-    * ``"local"`` (``n <= jump_local_threshold``): single-task numpy path
-      doubling — one task beats per-job scheduling overhead below ~2M rows;
-    * ``"targets"`` (``|distinct comps| <= jump_local_threshold``): solve the
-      comp-closure (typically ~6x smaller than n) in one numpy task, apply
-      it with one parallel probe join — its only non-parallel work is the
-      tiny kernel task and, within the broadcast bound, one broadcast build;
-    * ``"doubling"`` (everything else): distributed path doubling, the only
-      plan with no single-task or broadcast step, so the only one that
-      scales past both bounds (measured 2x faster than shuffled probe
-      chains, BENCH/jump_ab.json).
-
-    ``t_est``: size of the distinct-comp target set, read as
-    ``approx_count_distinct(comp)`` from the SAME aggregation job that counts
-    the parent table (one driver round-trip serves both numbers). It only
-    picks a plan, so the ±few-% HLL error is harmless: every plan is exact.
-
-    Every plan returns its own persisted+materialized table; release it
-    with ``unpersist()``.
-    """
-    if n_before <= jump_local_threshold:
-        round_labels = _pointer_jump_local(parents).persist()
-        round_labels.count()  # materialize before callers drop parents
-        return round_labels, "local"
-    if t_est <= jump_local_threshold:
-        targets = parents.select(F.col("comp").alias("node")).distinct()
-        return _pointer_jump_targets(
-            parents, targets,
-            broadcast_resolved=t_est <= broadcast_threshold_rows,
-        ), "targets"
-    return _pointer_jump(parents), "doubling"
+    return out.repartition(sp) if sp > 1 else out
 
 
 def _union_find_finish(edges: DataFrame) -> DataFrame:
@@ -397,23 +316,31 @@ def _hook_and_jump(
     """One Boruvka hook + pointer jump over the edge table ``e`` (``m``
     rows). Returns the persisted round labels, the round's record fields
     (``n_nodes``, ``jump``, ``hub_source``) and the heavy hitters for the
-    relabel."""
+    relabel.
+
+    The jump plan (``jump``) is ``"local"`` (one numpy task,
+    ``_pointer_jump_local``) when the parent table has at most
+    ``jump_local_threshold`` rows, else ``"doubling"`` (``_pointer_jump``:
+    distributed path doubling, the only plan with no single-task or
+    broadcast step). Both return a persisted, materialized table.
+    """
     parents_full = _hook_parents(e).persist()
-    # ONE job fills the cache and returns both dispatch inputs: the node
-    # count (jumping preserves it) and the approximate distinct-comp count
-    # (picks the targets-reduced jump plan); the root count rides along
+    # ONE job fills the cache and returns the node count (jumping preserves
+    # it, and it picks the jump plan); the root count rides along
     stats = parents_full.agg(
         F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct("comp").alias("t"),
         F.sum((F.col("node") == F.col("comp")).cast("long")).alias("r"),
     ).collect()[0]
     n_before = stats["n"]
     count.fold(int(stats["r"] or 0), n_before)
-    round_labels, jump = _dispatch_jump(
-        parents_full.select("node", "comp"), n_before, t_est=stats["t"],
-        jump_local_threshold=jump_local_threshold,
-        broadcast_threshold_rows=broadcast_threshold_rows,
-    )
+    parents = parents_full.select("node", "comp")
+    if n_before <= jump_local_threshold:
+        jump = "local"
+        round_labels = _pointer_jump_local(parents).persist()
+        round_labels.count()  # materialize before parents_full is dropped
+    else:
+        jump = "doubling"
+        round_labels = _pointer_jump(parents)
     heavy: list[tuple[int, int]] = []
     hub_source = None
     if n_before > broadcast_threshold_rows:
@@ -573,17 +500,19 @@ def connected_components(
     relabel splits off detected mega-hubs (heavy hitters).
     ``checkpointer``: if given, per-round edge/label tables are persisted and
     a killed run resumes from the last completed round.
-    ``policy``: optional plans.policy.Policy overriding the two thresholds and
-    optionally enabling star-contraction rounds by density (variants.hpp).
+    ``policy``: optional plans.policy.Policy overriding
+    ``small_graph_threshold``, optionally enabling star-contraction rounds
+    by density (variants.hpp) or the KKT driver; the broadcast bound stays
+    byte-gated (or ``broadcast_threshold_rows``) under every policy.
     ``local_solve_bucket_width``: >0 runs one bundle-local union-find pass
     (SibeynWithBundles, G6) before the iterative loop — wins when node ids
     have locality (paths/grids/crawl order).
     ``jump_local_threshold``: picks each Boruvka round's pointer-jump plan,
-    named as ``jump`` in the round's record (see ``_dispatch_jump``):
-    ``"local"`` (one numpy task) when the parent table has at most this many
-    rows, ``"targets"`` when its distinct comps do, ``"doubling"`` (log(depth)
-    distributed self-joins) otherwise. The default is the measured crossover
-    (~2s/M rows single-task vs ~8s flat distributed).
+    named as ``jump`` in the round's record: ``"local"`` (one numpy task)
+    when the round's parent table has at most this many rows, else
+    ``"doubling"`` (log(depth) distributed self-joins, the plan that scales
+    past one task). 0 sends every round to ``"doubling"``. The default is
+    the measured crossover (~2s/M rows single-task vs ~8s flat distributed).
     ``hub_seeds``: known mega-hub node ids (e.g. flagged online by
     streaming.events.running_degree_monitor while the crawl frontier was
     ingesting) — the FIRST executed round arms the heavy-split relabel path
@@ -604,7 +533,6 @@ def connected_components(
     metrics = metrics if metrics is not None else CCMetrics()
     if policy is not None:
         small_graph_threshold = policy.small_graph_edges
-        broadcast_threshold_rows = policy.broadcast_rows
     if broadcast_threshold_rows is None:
         from ..tuning import broadcast_row_bound
 
@@ -618,6 +546,7 @@ def connected_components(
             pre_canonicalized=pre_canonicalized,
             seed=seed,
             jump_local_threshold=jump_local_threshold,
+            broadcast_threshold_rows=broadcast_threshold_rows,
             max_rounds=max_rounds,
             checkpointer=checkpointer,
         )
@@ -739,6 +668,7 @@ def _kkt_driver(
     pre_canonicalized: bool,
     seed: int,
     jump_local_threshold: int,
+    broadcast_threshold_rows: int,
     max_rounds: int,
     checkpointer: RoundCheckpointer | None = None,
 ) -> DataFrame:
@@ -830,7 +760,7 @@ def _kkt_driver(
             jump_local_threshold=jump_local_threshold,
             max_rounds=max_rounds,
             small_graph_threshold=policy.small_graph_edges,
-            broadcast_threshold_rows=policy.broadcast_rows,
+            broadcast_threshold_rows=broadcast_threshold_rows,
             seed=seed,
         )
         if sub_ckpt_root is not None:
@@ -850,7 +780,7 @@ def _kkt_driver(
                 "l1", {"labels1": labels1}
             )["labels1"].persist()
     n1 = labels1.count()
-    do_broadcast = n1 <= policy.broadcast_rows
+    do_broadcast = n1 <= broadcast_threshold_rows
 
     # --- phase: filter (one relabel of the large unsampled side) -----------
     if phases is not None and "filter" in done:

@@ -31,11 +31,13 @@ Observation.
   riding an Observation) and solved in one numpy task
   (`_union_find_finish`). Every join against the n-row label table and the
   m-row edge table is a broadcast semi/anti join — both big tables are
-  scanned, never shuffled — and the label table keeps its partition count.
+  scanned, never shuffled.
 * Distributed path — above either gate. Above the node gate the semi-joins
   fall back to one shuffled pass each; above the edge gate the subgraph is
   re-solved with the full engine. Still one bounded re-solve instead of the
   multi-round full recompute.
+
+On both paths the label table keeps the partition count it came in with.
 
 The worst case IS the giant component: deleting a bridge inside it
 re-solves the whole thing, which is fundamental (the split can only be
@@ -184,7 +186,7 @@ def decremental_connected_components(
         if m_aff is None:  # the subgraph's edge count, from its first round
             solved = metrics.rounds[first:first + 1]
             m_aff = solved[0]["m"] if solved else 0
-        out = untouched.unionByName(new_labels)
+        out = _same_layout(untouched.unionByName(new_labels), lab)
     metrics.add(kind="fold_kernel" if gate is None else "fold_distributed",
                 fold="delete", batch_rows=_observed(obs_rem, "rows"),
                 affected_nodes=n_aff, affected_edges=m_aff,

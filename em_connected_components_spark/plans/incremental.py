@@ -32,7 +32,7 @@ the graph, in both of the fold's regimes.
   (operators/numpy_cc.fold_insert_numpy), which returns the old-rep → new-comp
   map and the fresh nodes. One broadcast left join over the label table then
   applies the map. About 8 Spark jobs per fold, most of them tiny; the label
-  table is scanned, never shuffled, and keeps its partition count.
+  table is scanned, never shuffled.
 * Distributed path — above either gate. One broadcast semi-join carves the
   delta's label slice (byte-gated: above the bound the relabels fall back to
   one shuffled pass over the labels), the delta is relabeled through it, the
@@ -40,6 +40,9 @@ the graph, in both of the fold's regimes.
   composed back. A 100 TB web graph with a 10 GB crawl delta touches the
   delta iteratively and the label table linearly; the full-recompute
   alternative re-shuffles all 100 TB per round.
+
+Both paths hand back the label table with the partition count it came in
+with (`_same_layout`), so a table folded again and again keeps one layout.
 """
 
 from __future__ import annotations
@@ -255,6 +258,7 @@ def _distributed_fold(
     if slice_hint:
         # dl's vertex set is a subset of the byte-gate-cleared delta nodes
         dl = F.broadcast(dl)
-    return full.join(dl, full["comp"] == dl["__rep"], how="left").select(
+    out = full.join(dl, full["comp"] == dl["__rep"], how="left").select(
         "node", F.coalesce("__newc", "comp").alias("comp")
     )
+    return _same_layout(out, lab)

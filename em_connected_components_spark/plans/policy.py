@@ -4,9 +4,10 @@ Reference: cpp/variants.hpp:5-89 — ten tuning policies deciding (a) whether
 to contract at all this level, (b) how many nodes to aim for, (c) the
 Bernoulli sampling power; plus the semi-external switch
 (cpp/streaming/algorithms/Boruvka.h:83-85, `8 * 8B * n <= M`). In Spark the
-memory thresholds become row-count thresholds (broadcast / collect) and the
-density tests stay verbatim: they are driver-side ifs fed by per-round
-count() metrics — the engine's cost-based optimizer.
+memory threshold becomes an edge-count threshold (the one-task finish) and
+the density tests stay verbatim: they are driver-side ifs fed by per-round
+count() metrics — the engine's cost-based optimizer. The broadcast switch
+is not a policy value: it stays byte-gated (tuning.broadcast_row_bound).
 """
 
 from __future__ import annotations
@@ -22,9 +23,6 @@ class Policy:
     # finish in one executor task (vectorized union-find) when m <= this —
     # the Spark analogue of is_semi_externally_handleable (Boruvka.h:32-36,83-85)
     small_graph_edges: int = 200_000
-    # broadcast relabel joins when the label table has <= this many rows —
-    # the "labels fit in memory" switch (SURVEY.md §2.5)
-    broadcast_rows: int = 2_000_000
     # density threshold: below it the graph is tree-ish and the cheap star
     # round wins; above it min-hooking collapses dense regions faster
     # (variants.hpp:15-21 uses m/n < 4 or 8 to decide *whether* to contract)

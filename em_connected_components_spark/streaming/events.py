@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_LABELS_MANIFEST = "labels_manifest.json"
+
 
 def windowed_counts(
     events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
@@ -129,10 +131,11 @@ def streaming_label_maintenance(
     after every epoch are bit-identical to a batch solve over all edges seen
     so far (min-member composition is exact; tests assert equality per epoch).
 
-    Durability mirrors RoundCheckpointer's idiom (Hadoop FS only, cluster
-    portable): each epoch writes ``{labels_root}/v{epoch}`` then atomically
-    rename-commits a one-line manifest pointing at it. Versioned dirs, never
-    in-place overwrite — previously returned readers keep their file lists.
+    Durability is RoundCheckpointer's (`checkpoint.Manifest`: Hadoop FS
+    only, cluster portable): each epoch writes ``{labels_root}/v{epoch}``
+    then atomically rename-commits a manifest pointing at it. Versioned
+    dirs, never in-place overwrite — previously returned readers keep their
+    file lists.
     At-least-once replay is safe WITHOUT epoch bookkeeping because folding a
     batch into labels that already include it is a mathematical no-op: every
     replayed edge relabels to a self-loop and the delta graph is empty (the
@@ -144,23 +147,17 @@ def streaming_label_maintenance(
     Returns a writeStream builder; pair with `.trigger(...)` + `.start()`.
     Read the current table any time with `current_labels(spark, labels_root)`.
     """
-    import json as _json
-
-    from ..checkpoint import _HadoopFS, _join
+    from ..checkpoint import Manifest
     from ..operators.normalize import canonicalize
     from ..plans.connected_components import connected_components
     from ..plans.incremental import incremental_connected_components
 
-    manifest_name = "labels_manifest.json"
-
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        fs = _HadoopFS(spark, labels_root)
-        fs.mkdirs(labels_root)
+        store = Manifest(spark, labels_root, _LABELS_MANIFEST, None)
         edges = canonicalize(batch_df.select("src", "dst"))
-        mpath = _join(labels_root, manifest_name)
-        if fs.exists(mpath):
-            manifest = _json.loads(fs.read_bytes(mpath).decode("utf-8"))
+        manifest = store.read()
+        if manifest is not None:
             prior = spark.read.parquet(manifest["path"])
             labels = incremental_connected_components(prior, edges,
                                                       pre_canonicalized=True,
@@ -170,22 +167,18 @@ def streaming_label_maintenance(
             labels = connected_components(edges, pre_canonicalized=True,
                                           **cc_kwargs)
             versions = []
-        vdir = _join(labels_root, f"v{epoch_id}")
+        vdir = store.at(f"v{epoch_id}")
         labels.write.mode("overwrite").parquet(vdir)
         versions.append({"epoch": epoch_id, "path": vdir})
         stale, versions = (
             versions[: -(keep_versions + 1)],
             versions[-(keep_versions + 1):],
         )
-        tmp = mpath + ".tmp"
-        fs.write_bytes(tmp, _json.dumps(
-            {"path": vdir, "epoch": epoch_id, "versions": versions}
-        ).encode())
-        fs.rename_overwrite(tmp, mpath)  # commit point
+        store.commit({"path": vdir, "epoch": epoch_id, "versions": versions})
         # prune only AFTER the commit: a crash in between must never leave
         # the (old) manifest pointing at a deleted version dir
         for v in stale:
-            fs.delete(v["path"], recursive=True)
+            store.fs.delete(v["path"], recursive=True)
 
     return (
         edge_stream.writeStream.outputMode("append")
@@ -197,15 +190,11 @@ def streaming_label_maintenance(
 def current_labels(spark, labels_root: str) -> DataFrame | None:
     """Read the latest committed label table maintained by
     `streaming_label_maintenance`, or None before the first epoch commits."""
-    import json as _json
+    from ..checkpoint import Manifest
 
-    from ..checkpoint import _HadoopFS, _join
-
-    fs = _HadoopFS(spark, labels_root)
-    mpath = _join(labels_root, "labels_manifest.json")
-    if not fs.exists(mpath):
+    manifest = Manifest(spark, labels_root, _LABELS_MANIFEST, None).read()
+    if manifest is None:
         return None
-    manifest = _json.loads(fs.read_bytes(mpath).decode("utf-8"))
     return spark.read.parquet(manifest["path"])
 
 

@@ -4,7 +4,6 @@ invariants (mirrors test/TestContractions.cpp and stream-checks.hpp)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from em_connected_components_spark.sources import generators as gen
 from em_connected_components_spark.operators.normalize import canonicalize
@@ -112,13 +111,13 @@ def test_local_vs_distributed_pointer_jump(spark):
     assert {r["jump"] for r in mb.rounds} == {"local"}
 
 
-def test_targets_reduced_jump_agrees(spark):
-    # the targets-reduced jump (solve the comp-closure in one kernel task,
-    # apply with one probe join) must equal plain path doubling — including
-    # on a deep chain, where every node is also a target
+def test_local_jump_agrees_with_doubling(spark):
+    # the one-task numpy jump must equal distributed path doubling —
+    # including on a deep chain, where every hop lands on another chain node
     from em_connected_components_spark.plans.connected_components import (
+        _hook_parents,
         _pointer_jump,
-        _pointer_jump_targets,
+        _pointer_jump_local,
     )
 
     # parent tables: a depth-20 chain, a star, and a hook forest from rMAT
@@ -126,48 +125,18 @@ def test_targets_reduced_jump_agrees(spark):
         [(i, max(i - 1, 0)) for i in range(20)], schema="node long, comp long"
     )
     star = spark.createDataFrame(
-        [(i, 0) for i in range(50)] + [(0, 0)], schema="node long, comp long"
+        [(i, 0) for i in range(50)], schema="node long, comp long"
     )
-    from em_connected_components_spark.plans.connected_components import (
-        _hook_parents,
-    )
-
     forest = _hook_parents(
         canonicalize(gen.rmat(spark, scale=8, edge_factor=4, seed=5))
     ).select("node", "comp")
 
     for parents in (chain, star, forest):
-        want = sorted(map(tuple, _pointer_jump(parents).collect()))
-        targets = parents.select(F.col("comp").alias("node")).distinct()
-        for bcast in (True, False):
-            got = _pointer_jump_targets(
-                parents, targets, broadcast_resolved=bcast
-            )
-            assert sorted(map(tuple, got.collect())) == want
-            got.unpersist()
-
-
-def test_targets_jump_route_in_cc(spark):
-    # route an end-to-end CC run through the targets-reduced branch: pick
-    # jump_local_threshold strictly between |targets| and n so the dispatch
-    # can only take the new path on round 0
-    from em_connected_components_spark.plans.connected_components import (
-        _hook_parents,
-    )
-
-    edges = canonicalize(gen.rmat(spark, scale=9, edge_factor=4, seed=8))
-    parents = _hook_parents(edges)
-    n = parents.count()
-    t = parents.select("comp").distinct().count()
-    assert t < n  # hook forests always shrink the comp set
-    thr = (t + n) // 2
-    edge_rows = [(r["src"], r["dst"]) for r in edges.collect()]
-    labels, metrics = connected_components_metrics(
-        edges, small_graph_threshold=0, pre_canonicalized=True,
-        jump_local_threshold=thr,
-    )
-    assert _partition(labels) == python_union_find(edge_rows)
-    assert metrics.rounds[0]["jump"] == "targets"
+        doubled = _pointer_jump(parents)
+        want = sorted(map(tuple, doubled.collect()))
+        got = sorted(map(tuple, _pointer_jump_local(parents).collect()))
+        assert got == want
+        doubled.unpersist()
 
 
 def test_semi_external_switch_agrees(spark):

@@ -134,8 +134,9 @@ def test_kkt_phase_kill_and_resume_every_boundary(spark, tmp_path, monkeypatch):
     from em_connected_components_spark.plans.policy import Policy
 
     edges = canonicalize(gen.gilbert(spark, 400, 8.0, seed=31))
-    pol = Policy(strategy="kkt", small_graph_edges=50, broadcast_rows=10**6)
-    ref = connected_components(edges, pre_canonicalized=True, policy=pol)
+    pol = Policy(strategy="kkt", small_graph_edges=50)
+    ref = connected_components(edges, pre_canonicalized=True, policy=pol,
+                               broadcast_threshold_rows=10**6)
     want_labels = sorted(map(tuple, ref.collect()))
 
     phase_order = ["split", "l1", "filter", "l2"]
@@ -154,6 +155,7 @@ def test_kkt_phase_kill_and_resume_every_boundary(spark, tmp_path, monkeypatch):
             with pytest.raises(RuntimeError, match="injected kill"):
                 connected_components(
                     edges, pre_canonicalized=True, policy=pol,
+                    broadcast_threshold_rows=10**6,
                     checkpointer=RoundCheckpointer(spark, root),
                 )
 
@@ -164,6 +166,7 @@ def test_kkt_phase_kill_and_resume_every_boundary(spark, tmp_path, monkeypatch):
         metrics = CCMetrics()
         got = connected_components(
             edges, pre_canonicalized=True, policy=pol, metrics=metrics,
+            broadcast_threshold_rows=10**6,
             checkpointer=RoundCheckpointer(spark, root),
         )
         assert sorted(map(tuple, got.collect())) == want_labels

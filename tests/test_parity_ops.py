@@ -89,10 +89,11 @@ def test_cc_kkt_policy_matches_oracle_dense(spark):
 
     edges = canonicalize(gen.gilbert(spark, 400, 8.0, seed=31))
     edge_rows = [(r["src"], r["dst"]) for r in edges.collect()]
-    pol = Policy(strategy="kkt", small_graph_edges=50, broadcast_rows=10**6)
+    pol = Policy(strategy="kkt", small_graph_edges=50)
     metrics = CCMetrics()
     labels = connected_components(
-        edges, pre_canonicalized=True, policy=pol, metrics=metrics
+        edges, pre_canonicalized=True, policy=pol, metrics=metrics,
+        broadcast_threshold_rows=10**6,
     )
     assert labels_to_partition(labels.collect()) == python_union_find(edge_rows)
     kinds = [r["kind"] for r in metrics.rounds]

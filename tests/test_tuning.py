@@ -44,12 +44,14 @@ def test_conf_override_pins_bound(spark):
 
 def test_over_bound_labels_take_shuffled_path(spark):
     # with the bound pinned below the graph's node count, the CC driver must
-    # not arm the forced-broadcast hint (metrics record the plan choice)
+    # not arm the forced-broadcast hint (metrics record the plan choice) —
+    # with or without a policy, and in the KKT driver's sub-solves too
     from em_connected_components_spark.operators.normalize import canonicalize
     from em_connected_components_spark.plans.connected_components import (
         CCMetrics,
         connected_components,
     )
+    from em_connected_components_spark.plans.policy import Policy
     from em_connected_components_spark.sources import generators as gen
 
     from .conftest import labels_to_partition, python_union_find
@@ -58,17 +60,21 @@ def test_over_bound_labels_take_shuffled_path(spark):
     edge_rows = [(r["src"], r["dst"]) for r in edges.collect()]
     spark.conf.set("spark.emcc.broadcast.maxRows", "10")
     try:
-        metrics = CCMetrics()
-        labels = connected_components(
-            edges, pre_canonicalized=True, metrics=metrics,
-            small_graph_threshold=0, jump_local_threshold=0,
-        )
-        supersteps = [r for r in metrics.rounds if "broadcast" in r]
-        assert supersteps and all(not r["broadcast"] for r in supersteps)
-        # the shuffled path is still exact
-        assert labels_to_partition(labels.collect()) == python_union_find(
-            edge_rows
-        )
+        for policy in (None, Policy(small_graph_edges=0),
+                       Policy(strategy="kkt", small_graph_edges=0)):
+            metrics = CCMetrics()
+            labels = connected_components(
+                edges, pre_canonicalized=True, metrics=metrics,
+                small_graph_threshold=0, jump_local_threshold=0,
+                policy=policy,
+            )
+            supersteps = [r for r in metrics.rounds if "broadcast" in r]
+            assert supersteps, policy
+            assert all(not r["broadcast"] for r in supersteps), policy
+            # the shuffled path is still exact
+            assert labels_to_partition(labels.collect()) == python_union_find(
+                edge_rows
+            ), policy
     finally:
         spark.conf.unset("spark.emcc.broadcast.maxRows")
 
