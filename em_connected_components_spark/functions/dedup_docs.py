@@ -359,8 +359,3 @@ def simhash(
         # Java shiftleft wraps at b=63 -> two's-complement sign bit
         val = val + F.shiftleft(bitval, b)
     return per_doc.select(id_col, val.alias("simhash"))
-
-
-def hamming_distance64(a, b):
-    """Hamming distance between two 64-bit columns (bit_count of xor)."""
-    return F.bit_count(F.expr(f"{a} ^ {b}"))

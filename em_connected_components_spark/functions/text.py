@@ -32,18 +32,6 @@ def token_count(text: Column | str) -> Column:
     )
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """Sub-word-ish token count: split on word/non-word boundaries — a cheap
-    BPE proxy (counts runs of letters, digits, and punctuation separately)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.size(
-        F.filter(
-            F.split(c, r"(?<=\W)(?=\w)|(?<=\w)(?=\W)|\s+"),
-            lambda s: F.trim(s) != "",
-        )
-    )
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / punctuation / uppercase / digit counters — integer-exact
     quality raw features (ratios left to the caller to keep floats out of

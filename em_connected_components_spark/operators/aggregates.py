@@ -22,19 +22,6 @@ def node_count_exact(edges: DataFrame) -> DataFrame:
     )
 
 
-def node_count_approx(edges: DataFrame, rsd: float = 0.02) -> DataFrame:
-    """HLL++ distinct endpoint estimate.
-
-    Replaces the reference's min-hash / Flajolet-Martin / KMV sketch family
-    (cpp/sketches/MinSketch.h, Tidemark.h, KSummary.h, ApplyMeans.h,
-    ApplyMedians.h) — Spark's approx_count_distinct is the same estimator
-    class with the accuracy knob built in.
-    """
-    return symmetrize(edges).agg(
-        F.approx_count_distinct("src", rsd).alias("n_nodes_approx")
-    )
-
-
 def max_node_id(edges: DataFrame) -> DataFrame:
     """Max endpoint id (cpp/max-node-id.cpp:23-29)."""
     return edges.agg(F.max(F.greatest("src", "dst")).alias("max_node_id"))

@@ -14,8 +14,9 @@ applyInPandas), never on the driver:
   (plans/connected_components.py) — the Spark analogue of the reference's
   semi-external switch, with the serial work riding an executor so no
   driver-local filesystem or Arrow collect is involved;
-* the insert and delete folds once their batch-bounded piece fits one task
-  (plans/incremental.py, plans/decremental.py);
+* the insert fold's solver below its gates (plans/incremental.py; above
+  them the same piece goes to the full engine), and the delete fold once its
+  affected subgraph fits one task (plans/decremental.py);
 * the bundle-local union-find pass (plans/local_solve.py — SibeynWithBundles,
   cpp/streaming/algorithms/SibeynWithBundles.h:23-206).
 """

@@ -63,8 +63,3 @@ def reservoir_per_group(
             ).alias(pick_col)
         )
     )
-
-
-def sample_edges(edges: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """Bernoulli edge sample, deterministic in (seed, src, dst)."""
-    return edges.filter(bernoulli_coin("src", "dst", p=fraction, seed=seed))

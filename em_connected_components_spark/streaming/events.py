@@ -126,8 +126,8 @@ def streaming_label_maintenance(
 
     Composes the streaming front door with `plans/incremental`: the FIRST
     micro-batch is solved with the full engine; every later batch folds in
-    via incremental_connected_components — relabel the batch through the
-    current labels, CC on the batch-bounded contracted delta, compose. Labels
+    via incremental_connected_components — carve the batch's slice of the
+    current labels, solve the batch-bounded piece, compose. Labels
     after every epoch are bit-identical to a batch solve over all edges seen
     so far (min-member composition is exact; tests assert equality per epoch).
 
@@ -138,8 +138,8 @@ def streaming_label_maintenance(
     file lists.
     At-least-once replay is safe WITHOUT epoch bookkeeping because folding a
     batch into labels that already include it is a mathematical no-op: every
-    replayed edge relabels to a self-loop and the delta graph is empty (the
-    idempotency test pins this).
+    replayed edge lies inside one old component, so the piece's solve moves
+    no label and finds no new node (the idempotency test pins this).
 
     ``keep_versions`` old label versions are retained (readers of the
     previous epoch may still be live); older dirs are deleted on commit.
@@ -159,9 +159,7 @@ def streaming_label_maintenance(
         manifest = store.read()
         if manifest is not None:
             prior = spark.read.parquet(manifest["path"])
-            labels = incremental_connected_components(prior, edges,
-                                                      pre_canonicalized=True,
-                                                      **cc_kwargs)
+            labels = incremental_connected_components(prior, edges, **cc_kwargs)
             versions = manifest.get("versions", [])
         else:
             labels = connected_components(edges, pre_canonicalized=True,

@@ -15,11 +15,15 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from em_connected_components_spark.operators.numpy_cc import fold_insert_numpy
 from em_connected_components_spark.plans.connected_components import (
     CCMetrics,
+    _single_task_map,
     connected_components,
 )
 from em_connected_components_spark.plans.incremental import (
+    _piece,
+    _solve_piece,
     incremental_connected_components,
 )
 
@@ -70,6 +74,22 @@ def test_incremental_equals_full_random(spark, seed):
         assert _rows(_fold(path, base, _df(spark, new))) == want
 
 
+@pytest.mark.parametrize("seed", [1, 7])
+def test_distributed_solve_matches_kernel(spark, seed):
+    # the two solvers of one piece emit the same (key, comp, fresh) rows
+    rng = random.Random(seed)
+    old = [(rng.randint(1, 120), rng.randint(1, 120)) for _ in range(150)]
+    new = [(rng.randint(1, 260), rng.randint(1, 260)) for _ in range(60)]
+    base = connected_components(_df(spark, old), small_graph_threshold=0)
+    piece = _piece(base, _df(spark, new), True)
+
+    def rows(df):
+        return sorted((r["key"], r["comp"], r["fresh"]) for r in df.collect())
+
+    kernel = _single_task_map(piece, fold_insert_numpy, ("key", "comp", "fresh"))
+    assert rows(_solve_piece(piece, small_graph_threshold=0)) == rows(kernel)
+
+
 def test_incremental_merge_two_old_components(spark):
     old = [(1, 2), (2, 3), (10, 11)]
     new = [(3, 10)]  # bridges comp{1,2,3} and comp{10,11}
@@ -90,8 +110,8 @@ def test_incremental_only_new_nodes(spark):
 
 
 def test_incremental_redundant_delta_is_noop(spark):
-    # every delta edge lands inside one old component -> relabeled delta is
-    # all self-loops, inner CC sees an empty graph, labels are unchanged
+    # every delta edge lands inside one old component -> the piece's solve
+    # moves no old rep and finds no fresh node, labels are unchanged
     old = [(1, 2), (2, 3), (3, 4)]
     new = [(1, 4), (2, 3)]
     base = connected_components(_df(spark, old), small_graph_threshold=0)
@@ -122,8 +142,8 @@ def test_incremental_chained_batches(spark):
 def test_incremental_shuffled_fallback_agrees(spark):
     # force the byte gate shut (spark.emcc.broadcast.maxRows=1): the delta
     # node set no longer clears the broadcast bound, so even a small batch
-    # leaves the kernel and the relabels take the shuffled full-table path
-    # — results must be identical
+    # leaves the kernel, and the slice carve and the compose take the
+    # shuffled joins over the full label table — results must be identical
     old = [(1, 2), (2, 3), (10, 11)]
     new = [(3, 10), (50, 51)]
     base = connected_components(_df(spark, old), small_graph_threshold=0)

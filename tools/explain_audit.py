@@ -187,15 +187,17 @@ def main() -> None:
         forbid=["Exchange"],
     )
 
-    # 11-12. incremental CC: below the byte gate the n-row label table is
+    # 11-13. incremental CC: below the byte gate the n-row label table is
     # scanned, never shuffled — every join against it is an explicit-hint
     # broadcast (incremental.py module docstring). Auto-broadcast is disabled
     # so only the engine's own byte-gated hints can produce a broadcast, and
     # BOTH shuffle join kinds are forbidden (the session prefers ShuffledHash
     # over SortMerge, so a leaked label shuffle would surface as either).
-    # Each path is audited on the plan it returns; joins that feed a
-    # materialized (checkpointed) input do not appear in it.
+    # Both paths share one plan and differ only in the solver, whose output
+    # is materialized (checkpointed): the returned plan holds the compose
+    # alone, and the piece the solvers read is audited on its own.
     from em_connected_components_spark.plans.incremental import (
+        _piece,
         incremental_connected_components,
     )
 
@@ -210,36 +212,43 @@ def main() -> None:
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    audit(
+        "incremental CC piece (slice carved by a broadcast semi-join)",
+        _piece(big_labels.select("node", "comp"), delta, True),
+        ["BroadcastHashJoin", "LeftSemi"],
+        "both solvers read the same piece: the batch edges plus the star "
+        "edges of their label slice, carved from the n-row star map by one "
+        "semi-join with the batch node set broadcast (the engine's own "
+        "byte-gated hint; auto-broadcast is disabled here) — any shuffle "
+        "join would be a label-side leak, so both kinds are forbidden",
+        forbid=["SortMergeJoin", "ShuffledHashJoin"],
+    )
     # Default: the batch fits small_graph_threshold, so the fold takes the
-    # single-task kernel path. The slice semi-join feeds the checkpointed
-    # numpy task, so the returned plan holds ONE label-table join: the
-    # broadcast left-outer apply of the old-rep -> new-comp map.
+    # single-task numpy solver.
     audit(
         "incremental CC, kernel path (label table scanned, never shuffled)",
         incremental_connected_components(big_labels, delta),
         ["BroadcastHashJoin", "LeftOuter"],
         "a crawl-delta fold that fits the kernel touches the n-row star map "
-        "through one broadcast-built left-outer join (the rep map applied "
-        "over a checkpoint of the numpy task's output); auto-broadcast is "
+        "through one broadcast-built left-outer join (the moved reps applied "
+        "over a checkpoint of the solver's output); auto-broadcast is "
         "disabled here, so the broadcast is the engine's own byte-gated "
         "hint, and ANY shuffle join would be a label-side leak — both kinds "
         "are forbidden",
         forbid=["SortMergeJoin", "ShuffledHashJoin"],
     )
-    # small_graph_threshold=0: the distributed path. Its relabels feed the
-    # inner solve, whose result is materialized, so the returned plan holds
-    # the slice carve (LeftSemi), the fresh-node complement (LeftAnti) and
-    # the compose (LeftOuter).
+    # small_graph_threshold=0: the distributed solver. Its semi- and
+    # anti-joins sit behind the same checkpoint as the numpy task's output.
     audit(
         "incremental CC, distributed path (label table scanned, never "
         "shuffled)",
         incremental_connected_components(big_labels, delta,
                                          small_graph_threshold=0),
-        ["BroadcastHashJoin", "LeftSemi", "LeftAnti", "LeftOuter"],
-        "above the kernel gate the fold touches the n-row star map only "
-        "through broadcast-built joins (slice semi-join, fresh-node anti, "
-        "compose); the only exchanges are on the batch-bounded delta side. "
-        "Both shuffle join kinds are forbidden, as on the kernel path",
+        ["BroadcastHashJoin", "LeftOuter"],
+        "above the kernel gate only the solver changes: the fold still "
+        "touches the n-row star map through the broadcast-built compose "
+        "over a checkpoint of the solver's output. Both shuffle join kinds "
+        "are forbidden, as on the kernel path",
         forbid=["SortMergeJoin", "ShuffledHashJoin"],
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
